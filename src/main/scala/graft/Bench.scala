@@ -13,13 +13,13 @@ object Bench {
   val DivergeRatio = 3.0
   val DivergeFloorSec = 1.0
 
-  private def gcSeconds(): Double = {
+  private[graft] def gcSeconds(): Double = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime.max(0L)).sum / 1e3
   }
 
-  private def processCpuSeconds(): Double =
+  private[graft] def processCpuSeconds(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean =>
         os.getProcessCpuTime.max(0L) / 1e9
@@ -34,7 +34,7 @@ object Bench {
     * cold-cost bimodality (driver 21.5 s vs builder 4.7 s on one commit,
     * each internally consistent — a per-JVM-instance mode, not noise).
     */
-  private def jitSeconds(): Double = {
+  private[graft] def jitSeconds(): Double = {
     val c = java.lang.management.ManagementFactory.getCompilationMXBean
     if (c != null && c.isCompilationTimeMonitoringSupported)
       c.getTotalCompilationTime / 1e3

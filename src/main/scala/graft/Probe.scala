@@ -1,0 +1,55 @@
+package graft
+
+/** Dev main: where registered queries spend their time, split by the
+  * harness rather than by hand-copied stage code —
+  * `SPARK_GRAFT_CPUS=N runMain graft.Probe <sfDir> <query>...`.
+  *
+  * Every listed query first runs once untimed (JIT warm-up). Then, per
+  * query, the memo and bucketed-table state is reset and a cold run is
+  * timed, split into construct (building the DataFrame, including any
+  * eager one-time builds) and action (`count()`); then a warm run with the
+  * memos in place. Each run prints one `PROBE` line (rows, wall, CPU-s,
+  * GC-s, JIT-s, builds) and one `SPAN` line per scratch write it made —
+  * memo stages, bucketed tables and per-invocation materializations —
+  * named by memo key without its `$sfDir#` prefix, timed and sized on disk
+  * before the sweep.
+  */
+object Probe {
+  def main(args: Array[String]): Unit = {
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val sfDir = args(0)
+    val names = args.toSeq.drop(1)
+    def settle(): Unit = { spark.catalog.clearCache(); Scratch.sweepEphemeral() }
+
+    def run(q: String, label: String): Unit = {
+      val b0 = Scratch.buildsCount
+      val g0 = Bench.gcSeconds(); val c0 = Bench.processCpuSeconds(); val j0 = Bench.jitSeconds()
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      val t1 = System.nanoTime()
+      val rows = df.count()
+      val t2 = System.nanoTime()
+      println(f"PROBE $q $label rows=$rows wall=${(t2 - t0) / 1e9}%.2f " +
+        f"construct=${(t1 - t0) / 1e9}%.2f action=${(t2 - t1) / 1e9}%.2f " +
+        f"cpu=${Bench.processCpuSeconds() - c0}%.1f gc=${Bench.gcSeconds() - g0}%.2f " +
+        f"jit=${Bench.jitSeconds() - j0}%.1f builds=${Scratch.buildsCount - b0}")
+      Scratch.spans.filter(_.startNs >= t0).foreach { s =>
+        println(f"  SPAN ${s.kind}%-11s ${s.name.stripPrefix(s"$sfDir#")} " +
+          f"wall=${s.wallNs / 1e9}%.2f bytes=${s.bytes} ${s.path}")
+      }
+      settle()
+    }
+
+    names.foreach { q =>
+      try SparkEntry.queries(q)(spark, sfDir).count()
+      catch { case e: Throwable => println(s"WARMUP $q FAILED: $e") }
+      settle()
+    }
+    names.foreach { q =>
+      Scratch.clearMemo(); Scratch.dropBucketedTables(spark); spark.catalog.clearCache()
+      run(q, "cold")
+      run(q, "warm")
+    }
+    spark.stop()
+  }
+}

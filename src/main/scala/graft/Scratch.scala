@@ -81,13 +81,15 @@ object Scratch {
     */
   def materialize(df: DataFrame, prefix: String): DataFrame = {
     val d = dir(prefix)
-    ephemeral.add(Paths.get(d))
-    df.write.mode("overwrite").parquet(d)
+    val t0 = System.nanoTime()
+    // registered even when the write fails, so the sweep still removes the dir
+    try df.write.mode("overwrite").parquet(d)
+    finally ephemeral.add(Span(prefix, "ephemeral", t0, System.nanoTime() - t0, d))
     df.sparkSession.read.parquet(d)
   }
 
-  // per-invocation materialize dirs, swept between queries by the harnesses
-  private val ephemeral = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  // per-invocation materialize writes, swept between queries by the harnesses
+  private val ephemeral = new java.util.concurrent.ConcurrentLinkedQueue[Span]()
 
   /** Delete every per-invocation [[materialize]] dir created since the last
     * sweep. Callers (Bench, Verify) invoke this AFTER the query's action has
@@ -97,14 +99,10 @@ object Scratch {
     * shape ([[memoize]]); they fall to [[clearMemo]]/[[dropBucketedTables]].
     */
   def sweepEphemeral(): Unit = {
-    var p = ephemeral.poll()
-    while (p != null) { deleteRecursively(p); p = ephemeral.poll() }
+    var s = ephemeral.poll()
+    while (s != null) { delete(s.path); s = ephemeral.poll() }
   }
 
-  // content key → future scratch parquet path, one entry per logical
-  // pipeline stage per JVM (see memoize); a per-key future rather than a
-  // global lock so concurrent callers computing DIFFERENT stages never
-  // serialize behind each other's Spark jobs
   // monotone count of one-time builds (memoized stages + bucketed index
   // tables) actually COMPUTED by this JVM — memo hits don't advance it.
   // Bench samples the delta around each query to tell "paid an index/memo
@@ -116,8 +114,44 @@ object Scratch {
     */
   def buildsCount: Long = builds.get()
 
+  /** One scratch write: the memo key (or the [[materialize]] prefix), its
+    * kind (`memo`, `partitioned`, `bucketed` or `ephemeral`), when it
+    * started and how long the build + write took (a stage that forces
+    * another memo inside its thunk includes that build), and the path the
+    * files landed under. A span lives exactly as long as its files: each
+    * is stored in the structure that owns the write, so [[clearMemo]],
+    * [[dropBucketedTables]] and [[sweepEphemeral]] drop it with them.
+    */
+  final case class Span(name: String, kind: String, startNs: Long, wallNs: Long, path: String) {
+    /** Bytes currently under [[path]] (0 once its files are deleted). */
+    def bytes: Long =
+      try {
+        val walk = Files.walk(Paths.get(path))
+        try walk.filter(f => Files.isRegularFile(f)).mapToLong(f => Files.size(f)).sum()
+        finally walk.close()
+      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => 0L }
+  }
+
+  /** Every live span in this JVM — memo stages and bucketed tables not yet
+    * cleared, [[materialize]] writes not yet swept — in start order.
+    */
+  def spans: Seq[Span] = {
+    val out = Seq.newBuilder[Span]
+    memo.values.forEach(f => completed(f).foreach(out += _))
+    bucketMemo.values.forEach(f => completed(f).foreach(out += _.span))
+    ephemeral.forEach(out += _)
+    out.result().sortBy(_.startNs)
+  }
+
+  private def completed[T](f: java.util.concurrent.CompletableFuture[T]): Option[T] =
+    if (f.isDone && !f.isCompletedExceptionally) Some(f.join()) else None
+
+  // content key → future span of its scratch parquet write, one entry per
+  // logical pipeline stage per JVM (see memoize); a per-key future rather
+  // than a global lock so concurrent callers computing DIFFERENT stages
+  // never serialize behind each other's Spark jobs
   private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Span]]()
 
   /** [[materialize]], memoized on a logical-stage key: the first call per JVM
     * computes `df` and writes it to scratch parquet; every later call with
@@ -130,9 +164,10 @@ object Scratch {
     * corpus, instead of each query re-running the shared upstream stages.
     *
     * The key MUST identify the stage's full input and logic — convention:
-    * `s"$sfDir#<stage>#<params>"`. Callers whose output must be fresh per
-    * invocation (e.g. the per-round connected-components label tables) use
-    * [[materialize]] directly.
+    * `s"$sfDir#<family>#<stage>#<params>"`, and it names the build's
+    * [[Span]]. Callers whose output must be fresh per invocation (e.g. the
+    * per-round connected-components label tables) use [[materialize]]
+    * directly.
     *
     * Exactly-once compute per key via a per-key future: the first caller
     * installs and completes it, racers (and nested stages on other keys)
@@ -141,7 +176,7 @@ object Scratch {
     */
   def memoize(spark: org.apache.spark.sql.SparkSession, key: String)
              (df: => DataFrame): DataFrame =
-    memoizeWith(spark, key)(df.write.mode("overwrite").parquet(_))
+    memoizeWith(spark, key, "memo")(df.write.mode("overwrite").parquet(_))
 
   /** [[memoize]] with a Hive-style `partitionBy` layout: the scratch table
     * is written under `col=value/` directories, so a later scan with a
@@ -153,21 +188,22 @@ object Scratch {
   def memoizePartitioned(spark: org.apache.spark.sql.SparkSession, key: String,
                          partitionCols: Seq[String])
                         (df: => DataFrame): DataFrame =
-    memoizeWith(spark, key)(
+    memoizeWith(spark, key, "partitioned")(
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(_))
 
-  private def memoizeWith(spark: org.apache.spark.sql.SparkSession, key: String)
+  private def memoizeWith(spark: org.apache.spark.sql.SparkSession, key: String, kind: String)
                          (write: String => Unit): DataFrame = {
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
+    val fresh = new java.util.concurrent.CompletableFuture[Span]()
     val prior = memo.putIfAbsent(key, fresh)
     val fut =
       if (prior != null) prior
       else {
         try {
           val d = dir("graft_memo")
+          val t0 = System.nanoTime()
           write(d)
           builds.incrementAndGet()
-          fresh.complete(d)
+          fresh.complete(Span(key, kind, t0, System.nanoTime() - t0, d))
         } catch {
           case e: Throwable =>
             memo.remove(key, fresh)
@@ -176,7 +212,7 @@ object Scratch {
         }
         fresh
       }
-    spark.read.parquet(fut.join())
+    spark.read.parquet(fut.join().path)
   }
 
   /** Fan a narrow frame out to the session's parallelism BEFORE expensive
@@ -229,9 +265,9 @@ object Scratch {
       }
     }
 
-  private final case class BucketTable(name: String, path: String)
+  private final case class BucketTable(name: String, span: Span)
 
-  // logical-stage key → future (catalog name, scratch path) of a persisted
+  // logical-stage key → future (catalog name, write span) of a persisted
   // bucketed table — same per-key-future discipline as [[memoize]] so a
   // multi-job index build for one corpus never serializes a concurrent
   // build for another
@@ -264,6 +300,7 @@ object Scratch {
           val t = s"${prefix}_${java.lang.Long.toHexString(System.nanoTime())}"
           val path = dir(prefix)
           val buckets = defaultBuckets(spark)
+          val t0 = System.nanoTime()
           df.repartition(buckets,
               bucketCols.map(org.apache.spark.sql.functions.col): _*)
             .write.mode("overwrite")
@@ -272,7 +309,7 @@ object Scratch {
             .sortBy(bucketCols.head, bucketCols.tail: _*)
             .saveAsTable(t)
           builds.incrementAndGet()
-          fresh.complete(BucketTable(t, path))
+          fresh.complete(BucketTable(t, Span(key, "bucketed", t0, System.nanoTime() - t0, path)))
         } catch {
           case e: Throwable =>
             bucketMemo.remove(key, fresh)
@@ -291,13 +328,10 @@ object Scratch {
     * index-build + probe cost.
     */
   def dropBucketedTables(spark: org.apache.spark.sql.SparkSession): Unit = {
-    bucketMemo.values.forEach { f =>
-      if (f.isDone && !f.isCompletedExceptionally) {
-        val bt = f.join()
-        spark.sql(s"DROP TABLE IF EXISTS ${bt.name}")
-        deleteRecursively(Paths.get(bt.path))
-      }
-    }
+    bucketMemo.values.forEach(f => completed(f).foreach { bt =>
+      spark.sql(s"DROP TABLE IF EXISTS ${bt.name}")
+      delete(bt.span.path)
+    })
     bucketMemo.clear()
   }
 
@@ -307,9 +341,7 @@ object Scratch {
     * rather than timing warm memo scans.
     */
   def clearMemo(): Unit = {
-    memo.values.forEach { f =>
-      if (f.isDone && !f.isCompletedExceptionally) deleteRecursively(Paths.get(f.join()))
-    }
+    memo.values.forEach(f => completed(f).foreach(s => delete(s.path)))
     memo.clear()
   }
 }

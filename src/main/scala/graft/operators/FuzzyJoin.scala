@@ -53,7 +53,7 @@ object FuzzyJoin extends QueryModule {
     * census both consume it, and the deletion-key join should run once.
     */
   def fuzzyPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Scratch.memoize(spark, s"fuzzy_pairs:$sfDir") {
+    graft.Scratch.memoize(spark, s"$sfDir#fuzzy#pairs") {
       fuzzyPairsBuild(spark, sfDir)
     }
 
@@ -137,7 +137,7 @@ object FuzzyJoin extends QueryModule {
     * same reducer-block calculus as the d=1 keys and the LSH bands.
     */
   def fuzzyPairsD2(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Scratch.memoize(spark, s"fuzzy_pairs_d2:$sfDir") {
+    graft.Scratch.memoize(spark, s"$sfDir#fuzzy#pairs_d2") {
       val keyed = graft.Scratch.materialize(
         // the fixture's name table is one small file = one scan task; fan
         // out BEFORE the two explodes so the ~100x key expansion runs on
@@ -292,7 +292,7 @@ object FuzzyJoin extends QueryModule {
     // r19: the label-propagation fixpoint is deterministic per corpus —
     // memoize it (the componentLabels pattern) so repeated invocations scan
     // the label table instead of re-running the iterative loop's 5+ jobs
-    val labels = graft.Scratch.memoize(spark, s"fuzzy_cc_labels:$sfDir") {
+    val labels = graft.Scratch.memoize(spark, s"$sfDir#fuzzy#cc_labels") {
       graft.pipeline.Dedup.components(fuzzyPairs(spark, sfDir))
     }
     val names = Tables.customer(spark, sfDir)
@@ -436,7 +436,7 @@ object FuzzyJoin extends QueryModule {
     // and in production the gram index is built once and probed many times —
     // memoizing makes Bench publish that steady probe cost as a separate
     // number (the build-owning cold run stays the headline)
-    val grams = graft.Scratch.memoize(spark, s"fuzzy_qgram_grams:$sfDir") {
+    val grams = graft.Scratch.memoize(spark, s"$sfDir#fuzzy#qgram_grams") {
       // fan out BEFORE the explode (r18): the fixture's documents scan is
       // one small file = one task, so without this the gram table lands in
       // scratch as ~one parquet file and every downstream stage that scans
@@ -457,7 +457,7 @@ object FuzzyJoin extends QueryModule {
     // just the candidate equi-join + verify; the df aggregate, its
     // broadcast, and the per-doc window no longer run per query (Ed-Join
     // builds its prefix index offline for exactly this reason).
-    val pre = graft.Scratch.memoize(spark, s"fuzzy_qgram_prefix:$sfDir") {
+    val pre = graft.Scratch.memoize(spark, s"$sfDir#fuzzy#qgram_prefix") {
       val df = grams.groupBy("g").agg(count(lit(1)).as("df"))
       grams.join(broadcast(df), "g")
         .withColumn("rn", row_number().over(

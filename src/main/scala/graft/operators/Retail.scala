@@ -583,7 +583,7 @@ object Retail extends QueryModule {
   // query share them (the r3 advice lesson — never re-execute a sibling
   // query's full pipeline as a subroutine)
   private[operators] def distinctItems(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Scratch.memoize(spark, s"basket_items:$sfDir") {
+    graft.Scratch.memoize(spark, s"$sfDir#basket#items") {
       Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey").distinct()
     }
 
@@ -597,7 +597,7 @@ object Retail extends QueryModule {
     * Shared by [[topPairs]] and the PageRank adjacency build.
     */
   private[operators] def orderItemArrays(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Scratch.memoize(spark, s"basket_order_arrays:$sfDir") {
+    graft.Scratch.memoize(spark, s"$sfDir#basket#order_arrays") {
       distinctItems(spark, sfDir)
         .groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("parts"))
@@ -617,7 +617,7 @@ object Retail extends QueryModule {
         explode(expr("slice(parts, i + 1, size(parts) - i)")).as("part_b"))
 
   private def topPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Scratch.memoize(spark, s"basket_top_pairs:$sfDir") {
+    graft.Scratch.memoize(spark, s"$sfDir#basket#top_pairs") {
       orderPairs(spark, sfDir)
         .groupBy("part_a", "part_b")
         .agg(count(lit(1)).as("n_orders"))

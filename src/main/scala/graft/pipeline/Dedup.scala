@@ -1034,15 +1034,10 @@ object Dedup extends QueryModule {
     */
   private def componentLabels(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.memoize(spark, s"$sfDir#dedup#cc_labels") {
-      components(probePairs(spark, sfDir)).select(col("id").as("doc_id"), col("lbl"))
+      val pairs = minhashPairs(spark, sfDir).select("ia", "ib")
+        .union(simhashPairs(spark, sfDir).select("ia", "ib"))
+      components(pairs).select(col("id").as("doc_id"), col("lbl"))
     }
-
-  /** Dev-probe accessor (CcProbe): the union of the minhash+simhash pair
-    * memos — exactly the components() input of [[componentLabels]].
-    */
-  private[graft] def probePairs(spark: SparkSession, sfDir: String): DataFrame =
-    minhashPairs(spark, sfDir).select("ia", "ib")
-      .union(simhashPairs(spark, sfDir).select("ia", "ib"))
 
   /** `dedup_cluster_histogram`: the shape-of-duplication audit — how many
     * near-dup clusters exist at each size, plus the singleton row (docs in

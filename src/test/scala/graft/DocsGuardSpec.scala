@@ -190,4 +190,23 @@ class DocsGuardSpec extends AnyFunSuite {
       "registered queries with no SURVEY/COVERAGE inventory row: " +
         uncited.toSeq.sorted.mkString(", "))
   }
+
+  /** A deleted or renamed main leaves a dead command in the runbooks:
+    * every `runMain graft.X` cited in README.md, the verify skill and
+    * build.sbt must name an object with a `main` (checked on `graft.X$`
+    * by reflection, without initializing it).
+    */
+  test("every runMain in README.md, the verify skill and build.sbt names a main") {
+    val cited = Seq("README.md", ".claude/skills/verify/SKILL.md", "build.sbt").flatMap { d =>
+      val text = new String(java.nio.file.Files.readAllBytes(repoFile(d)), "UTF-8")
+      """runMain\s+(graft(?:\.\w+)+)""".r.findAllMatchIn(text).map(m => (d, m.group(1)))
+    }
+    assert(cited.nonEmpty)
+    val dead = cited.filterNot { case (_, obj) =>
+      scala.util.Try(Class.forName(obj + "$", false, getClass.getClassLoader)
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(dead.isEmpty, "runMain cites objects with no main: " +
+      dead.map { case (d, obj) => s"$d: $obj" }.mkString(", "))
+  }
 }

@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 
 /** Contract tests for the scratch memo layer: exactly-once compute per key
-  * under concurrency, independence across keys, retry after failure, and
-  * eager cleanup.
+  * under concurrency, independence across keys, retry after failure, eager
+  * cleanup, and one span per write that lives exactly as long as its files.
   */
 class ScratchSpec extends SparkSpec {
 
@@ -52,5 +52,50 @@ class ScratchSpec extends SparkSpec {
     Scratch.clearMemo()
     stage("a").count()
     assert(computes.get() === 3)
+  }
+
+  private def spansNamed(name: String) = Scratch.spans.filter(_.name == name)
+
+  private def buildAll(tag: String): Unit = {
+    Scratch.memoize(spark, s"spec#span-memo-$tag")(spark.range(10).toDF()).count()
+    Scratch.memoizeBucketed(spark, s"spec#span-bucketed-$tag", "graft_spec_bkt", Seq("id"))(
+      spark.range(10).toDF()).count()
+    Scratch.materialize(spark.range(10).toDF(), s"graft_spec_eph_$tag").count()
+  }
+
+  test("each build and materialize records one named, timed, sized span; a memo hit none") {
+    buildAll("a")
+    for ((name, kind) <- Seq("spec#span-memo-a" -> "memo",
+        "spec#span-bucketed-a" -> "bucketed", "graft_spec_eph_a" -> "ephemeral")) {
+      val ss = spansNamed(name)
+      assert(ss.size === 1, s"$name: $ss")
+      assert(ss.head.kind === kind && ss.head.wallNs >= 0 && ss.head.bytes > 0, ss.head)
+    }
+    val before = Scratch.spans
+    Scratch.memoize(spark, "spec#span-memo-a")(fail("a memo hit must not recompute")).count()
+    assert(Scratch.spans === before)
+  }
+
+  test("clearMemo, dropBucketedTables and sweepEphemeral each drop their spans") {
+    buildAll("b")
+    def live = Seq("spec#span-memo-b", "spec#span-bucketed-b", "graft_spec_eph_b")
+      .map(spansNamed(_).size)
+    assert(live === Seq(1, 1, 1))
+    Scratch.clearMemo()
+    assert(live === Seq(0, 1, 1))
+    Scratch.dropBucketedTables(spark)
+    assert(live === Seq(0, 0, 1))
+    Scratch.sweepEphemeral()
+    assert(live === Seq(0, 0, 0))
+  }
+
+  test("a dedup_components run leaves one sfDir-keyed span per counted build") {
+    Scratch.clearMemo(); Scratch.dropBucketedTables(spark)
+    val b0 = Scratch.buildsCount
+    SparkEntry.queries("dedup_components")(spark, Sf0001).count()
+    val built = Scratch.spans.filter(_.kind != "ephemeral")
+    assert(built.nonEmpty && built.size === Scratch.buildsCount - b0, built.map(_.name))
+    assert(built.forall(_.name.startsWith(s"$Sf0001#")), built.map(_.name))
+    Scratch.sweepEphemeral()
   }
 }
