@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.{byte, gzMemberHex, hexOf}
 
 /** Compressed-JSONL corpus ingestion — `.jsonl[.gz|.zst|.lz4]` is the
   * single most common LLM training-data drop format (C4/Dolma/RedPajama
@@ -25,7 +26,7 @@ import graft.{QueryModule, Tables}
   * without a `text` field throws, doc_id slot-space overflow throws —
   * never a silent drop.
   */
-object Jsonl extends QueryModule {
+object Jsonl extends QueryModule with Container[String] {
 
   /** The declared per-line schema of a JSONL data drop: the document
     * text plus the metadata fields every release carries in some form.
@@ -51,19 +52,16 @@ object Jsonl extends QueryModule {
   /** JSONL files → `documents`-shaped rows: the batch front door (a
     * landing bucket of `<id>.jsonl[.gz|.zst|.lz4]` files → the same
     * document schema every downstream operator consumes), fully in-plan.
-    * doc_id = fileId·2²⁴ + (non-empty) line index — the
-    * [[Warc.docsFromFiles]] scheme, loud on slot overflow via
-    * `raise_error` (the declarative twin of the task-side `require`).
-    * Works on a batch OR streaming binaryFile frame.
+    * doc_id = fileId·2²⁴ + (non-empty) line index — the [[Container]]
+    * scheme, loud on slot overflow via `raise_error` (the declarative twin
+    * of the task-side `require`). Overrides [[Container.docsFromFiles]]
+    * so the batch door stays ONE declarative plan with no typed boundary;
+    * works on a batch OR streaming binaryFile frame.
     */
-  def docsFromFiles(files: DataFrame): DataFrame =
+  override def docsFromFiles(files: DataFrame): DataFrame =
     files
-      .select(
-        expr("try_cast(regexp_extract(path, '(?i)(?:^|/)([0-9]+)\\\\.jsonl(\\\\.gz|\\\\.zst|\\\\.lz4)?$', 1) as long)")
-          .as("file_id"),
-        expr("lower(regexp_extract(path, '(?i)(?:^|/)[0-9]+\\\\.jsonl((\\\\.gz|\\\\.zst|\\\\.lz4)?)$', 1))")
-          .as("ext"),
-        col("content"))
+      .select(pathGroup(1).try_cast("long").as("file_id"),
+        lower(pathGroup(2)).as("ext"), col("content"))
       .filter(col("file_id").isNotNull)
       .withColumn("file_id", expr(
         """CASE WHEN file_id >= shiftleft(1L, 39)
@@ -90,16 +88,6 @@ object Jsonl extends QueryModule {
         coalesce(col("j.lang"), lit("und")).as("lang"),
         coalesce(col("j.url"), lit("unknown")).as("source"),
         length(col("j.text")).cast(LongType).as("n_chars"))
-
-  /** The streaming landing shape: JSONL drops appearing in `dir` stream
-    * through binaryFile into document rows, micro-batch by micro-batch —
-    * feeds [[graft.streaming.CorpusIngest.start]] exactly like the WARC
-    * and TAR front doors.
-    */
-  def docStream(spark: SparkSession, dir: String): DataFrame =
-    docsFromFiles(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
 
   /** Magic-sniffed streaming line reader: wrap `in` with the matching
     * incremental decompressor ([[Streams.sniffed]] — the shared
@@ -132,37 +120,20 @@ object Jsonl extends QueryModule {
     (text.get, scalar("lang").getOrElse("und"), scalar("url").getOrElse("unknown"))
   }
 
-  /** [[docsFromFiles]] by PATH — the huge-drop front door: the bucket
-    * lists DISTRIBUTED via [[Streams.dropTasks]] (driver pays one
-    * root-level `listStatus`; sharded prefix subdirs walk inside tasks,
-    * so drops any depth down are ingested too — the binaryFile scan only
-    * recurses partition-style dirs), then each task STREAMS its
-    * files through [[lines]] (gzip/zstd/lz4 all incremental), so a
-    * bucket of larger-than-memory `.jsonl.zst` drops ingests with O(one
-    * line) memory per task. Same doc_id scheme and row shape as
-    * [[docsFromFiles]] (parity-pinned in JsonlSpec).
-    */
-  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Streams.dropTasks(spark, dir, "(?i)^([0-9]+)\\.jsonl(\\.gz|\\.zst|\\.lz4)?$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (fileId, p) =>
-          require(fileId < (1L << 39),
-            s"jsonl file id $fileId exceeds the 2^39 doc_id file-slot space")
-          val path = new org.apache.hadoop.fs.Path(p)
-          val in = path.getFileSystem(conf).open(path)
-          Streams.closeOnExhaust(lines(in), in).zipWithIndex.map { case (l, i) =>
-            require(i < (1 << 24),
-              s"jsonl file $fileId: line $i exceeds the 2^24 doc_id slot space")
-            val (text, lang, url) = parseLine(l)
-            ((fileId << 24) | i, text, lang, url,
-              text.codePointCount(0, text.length).toLong)
-          }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  // The typed doors: [[docStream]] and [[docsFromPaths]] come from
+  // [[Container]]; the path door STREAMS each drop through [[lines]]
+  // (gzip/zstd/lz4 all incremental), so a bucket of larger-than-memory
+  // `.jsonl.zst` drops ingests with O(one line) memory per task. Same
+  // doc_id scheme and row shape as the in-plan [[docsFromFiles]]
+  // (parity-pinned in JsonlSpec).
+
+  protected def label = "jsonl"
+  protected def fileRe = "([0-9]+)\\.jsonl(\\.gz|\\.zst|\\.lz4)?"
+  // the typed walk of a held file; the in-plan batch door does not use it
+  protected def bytesWalk(bytes: Array[Byte]) = lines(new java.io.ByteArrayInputStream(bytes))
+  protected def pathWalk(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path) =
+    Streams.streamWalk(fs, path)(lines)
+  protected def doc(file: String, slot: Int, line: String) = Some(parseLine(line))
 
   // ---- jsonl_ingest: the in-plan parity fixture, all four codecs ----
 
@@ -180,9 +151,6 @@ object Jsonl extends QueryModule {
   private val LineLen = """{"id":"","h":"","k":0}""".length + 12 + 2 * SliceLen + 1
   private val PayloadLen = 2 * LineLen
 
-  private def hexOf(s: String): String =
-    s.getBytes("US-ASCII").map("%02X".format(_)).mkString
-
   /** Hex SQL for line `k` (payload bytes from `h`, id from `doc_id`). */
   private def lineHex(k: Int): String = {
     val pre = s"""{"id":""""
@@ -193,20 +161,6 @@ object Jsonl extends QueryModule {
     s"concat('${hexOf(pre)}', hex(cast(lpad(cast(doc_id as string), 12, '0') as binary)), " +
       s"'${hexOf(mid)}', hex(cast(substring(h, ${k * SliceStride * 2} + 1, ${SliceLen * 2}) as binary)), " +
       s"'${hexOf(post)}')"
-  }
-
-  /** gzip member wrapping the constant-length payload: stored-deflate
-    * block, native `crc32` trailer — the [[Warc]] gzMemberHex shape.
-    */
-  private def gzHex(rawHex: String, n: Int): String = {
-    val lenHex = "%02X%02X".format(n & 0xff, n >> 8)
-    val nlenHex = "%02X%02X".format(~n & 0xff, (~n >> 8) & 0xff)
-    val isizeHex = "%02X%02X%02X%02X".format(
-      n & 0xff, (n >> 8) & 0xff, (n >> 16) & 0xff, (n >> 24) & 0xff)
-    val crcBe = s"lpad(hex(crc32(unhex($rawHex))), 8, '0')"
-    val crcLe = s"concat(substring($crcBe, 7, 2), substring($crcBe, 5, 2), " +
-      s"substring($crcBe, 3, 2), substring($crcBe, 1, 2))"
-    s"concat('1F8B0800000000000003', '01$lenHex$nlenHex', $rawHex, $crcLe, '$isizeHex')"
   }
 
   /** zstd frame wrapping the constant-length payload: single-segment
@@ -267,7 +221,7 @@ object Jsonl extends QueryModule {
         .select(col("doc_id"), lit(ext).as("ext"),
           expr(s"unhex($frameHex)").as("content"))
     val framed = leg(0, "", rawHex)
-      .unionByName(leg(1, ".gz", gzHex(rawHex, PayloadLen)))
+      .unionByName(leg(1, ".gz", gzMemberHex(rawHex, PayloadLen)))
       .unionByName(leg(2, ".zst", zstdHex(rawHex, PayloadLen)))
       .unionByName(leg(3, ".lz4", lz4Hex(rawHex, PayloadLen)))
     framed
@@ -292,7 +246,6 @@ object Jsonl extends QueryModule {
   }
 
   private val jsonlIngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes
@@ -346,24 +299,18 @@ object Jsonl extends QueryModule {
         .as("body"))
       .select((col("g") * 4 + col("c")).as("fid"), col("c"),
         encode(concat(col("body"), lit("\n")), "UTF-8").as("payload"))
-    grouped.as[(Long, Long, Array[Byte])].foreachPartition {
-      (rows: Iterator[(Long, Long, Array[Byte])]) =>
-        // plain java.nio IO — see Warc.warcFilesIngest (Hadoop local FS
-        // forks a chmod process per file without the native library)
-        rows.foreach { case (fid, c, bytes) =>
-          val (ext, out) = c match {
-            case 0 => (".jsonl", bytes)
-            case 1 =>
-              val bo = new java.io.ByteArrayOutputStream()
-              val gz = new java.util.zip.GZIPOutputStream(bo)
-              gz.write(bytes); gz.close()
-              (".jsonl.gz", bo.toByteArray)
-            case 2 => (".jsonl.zst", graft.functions.ZstdDeflate.deflate(bytes))
-            case _ => (".jsonl.lz4", graft.functions.Lz4Deflate.deflate(bytes))
-          }
-          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$fid$ext"), out)
-        }
-    }
+    Streams.land(grouped.as[(Long, Long, Array[Byte])].map { case (fid, c, bytes) =>
+      c match {
+        case 0 => (s"$fid.jsonl", bytes)
+        case 1 =>
+          val bo = new java.io.ByteArrayOutputStream()
+          val gz = new java.util.zip.GZIPOutputStream(bo)
+          gz.write(bytes); gz.close()
+          (s"$fid.jsonl.gz", bo.toByteArray)
+        case 2 => (s"$fid.jsonl.zst", graft.functions.ZstdDeflate.deflate(bytes))
+        case _ => (s"$fid.jsonl.lz4", graft.functions.Lz4Deflate.deflate(bytes))
+      }
+    }, dir)
     docsFromPaths(spark, dir)
       .select(col("doc_id"),
         expr("cast(substring(source, 7) as bigint)").as("src_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.byte
 
 /** LZ4-frame corpus ingestion — with gzip, zstd, and splittable bz2 this
   * completes the big-four landing codecs; `.jsonl.lz4` / `.tar.lz4` are
@@ -76,7 +77,6 @@ object Lz4Corpus extends QueryModule {
   }
 
   private val lz4IngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes

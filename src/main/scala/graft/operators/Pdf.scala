@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.hexOf
 
 /** PDF text extraction — the other dominant text-bearing LLM-corpus
   * landing format next to HTML/WARC/JSONL. A pure-JVM walk of the
@@ -28,7 +29,7 @@ import graft.{QueryModule, Tables}
   * grammar), malformed strings/offsets/checked keywords — never a
   * silent empty result.
   */
-object Pdf extends QueryModule {
+object Pdf extends QueryModule with Container[String] {
 
   // ---------------------------------------------------------------
   // Object model
@@ -1617,88 +1618,31 @@ object Pdf extends QueryModule {
   // Front doors: PDF buckets → documents rows
   // ---------------------------------------------------------------
 
-  /** `<id>.pdf` drops → `documents`-shaped rows, one row per PAGE:
-    * doc_id = fileId·2²⁴ + page index (the [[Warc.docsFromFiles]]
-    * scheme — a real PDF corpus runs to thousands of pages, 16M is
-    * generous headroom and overflow rejects loudly), text = the page's
-    * extracted text, source = `<file name>#page=<n>` (1-based, the URL
-    * fragment convention viewers use). Works on a batch OR streaming
-    * binaryFile frame; whole-file bytes are inherent to the format (the
-    * xref lives at the tail), the same per-task memory contract as
-    * [[Zip.entriesFromFile]].
-    */
-  def docsFromFiles(files: DataFrame): DataFrame = {
-    import files.sparkSession.implicits._
-    files
-      .select(
-        expr("try_cast(regexp_extract(path, '(?i)(?:^|/)([0-9]+)\\\\.pdf$', 1) as long)")
-          .as("file_id"),
-        expr("regexp_extract(path, '([^/]+)$', 1)").as("name"),
-        col("content"))
-      .filter(col("file_id").isNotNull)
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (fileId, name, bytes) =>
-        require(fileId < (1L << 39),
-          s"pdf file id $fileId exceeds the 2^39 doc_id file-slot space")
-        pageRows(fileId, name, bytes)
-      })
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  // One row per PAGE: doc_id slot = page index (a real PDF corpus runs to
+  // thousands of pages, 16M is generous headroom), text = the page's
+  // extracted text, source = `<file name>#page=<n>` (1-based, the URL
+  // fragment convention viewers use). Both walks hold the whole file:
+  // random access is inherent to the format (the xref lives at the
+  // tail), the same per-task memory contract as [[Zip.entriesFromFile]].
 
-  private def pageRows(fileId: Long, name: String,
-      bytes: Array[Byte]): Iterator[(Long, String, String, String, Long)] = {
-    val pages = extractPages(bytes)
-    require(pages.length < (1 << 24),
-      s"pdf file $fileId: ${pages.length} pages exceed the 2^24 doc_id slot space")
-    pages.iterator.zipWithIndex.map { case (text, i) =>
-      ((fileId << 24) | i, text, "und", s"$name#page=${i + 1}",
-        text.codePointCount(0, text.length).toLong)
-    }
+  protected def label = "pdf"
+  protected def fileRe = "([0-9]+)\\.pdf"
+  protected def bytesWalk(bytes: Array[Byte]) = extractPages(bytes).iterator
+  protected def pathWalk(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path) = {
+    val len = fs.getFileStatus(path).getLen
+    // one file must land in one JVM array — the same in-memory bound
+    // Zip's central-directory read enforces; without it a >2 GiB file
+    // throws a cryptic NegativeArraySizeException and a >4 GiB one
+    // silently truncates to a stale earlier %%EOF
+    require(len <= Int.MaxValue,
+      s"pdf: file $path too large ($len bytes) for the in-memory walk")
+    val bytes = new Array[Byte](len.toInt)
+    val in = fs.open(path)
+    try in.readFully(0, bytes) finally in.close()
+    bytesWalk(bytes)
   }
-
-  /** The streaming landing shape: PDF drops appearing in `dir` stream
-    * through binaryFile into page-grain document rows, micro-batch by
-    * micro-batch — feeds [[graft.streaming.CorpusIngest.start]] exactly
-    * like the WARC/TAR/ZIP/JSONL front doors.
-    */
-  def docStream(spark: SparkSession, dir: String): DataFrame =
-    docsFromFiles(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
-
-  /** [[docsFromFiles]] by PATH — the huge-bucket front door: the bucket
-    * lists DISTRIBUTED via [[Streams.dropTasks]] (one root `listStatus`
-    * on the driver, sharded prefix subdirs walked inside tasks), each
-    * task reads its files fully (PDF random access needs the whole
-    * file) and walks the page tree. Same doc_id scheme and row shape as
-    * [[docsFromFiles]] (parity-pinned in PdfSpec).
-    */
-  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Streams.dropTasks(spark, dir, "(?i)^([0-9]+)\\.pdf$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (fileId, p) =>
-          require(fileId < (1L << 39),
-            s"pdf file id $fileId exceeds the 2^39 doc_id file-slot space")
-          val path = new org.apache.hadoop.fs.Path(p)
-          val fs = path.getFileSystem(conf)
-          val len = fs.getFileStatus(path).getLen
-          // whole-file bytes are inherent to the format (tail xref), so
-          // one file must land in one JVM array — the same in-memory
-          // bound Zip's central-directory read enforces; without it a
-          // >2 GiB file throws a cryptic NegativeArraySizeException and
-          // a >4 GiB one silently truncates to a stale earlier %%EOF
-          require(len <= Int.MaxValue,
-            s"pdf: file $p too large ($len bytes) for the in-memory walk")
-          val bytes = new Array[Byte](len.toInt)
-          val in = fs.open(path)
-          try in.readFully(0, bytes) finally in.close()
-          pageRows(fileId, path.getName, bytes)
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  protected def doc(file: String, slot: Int, page: String) =
+    Some((page, "und", s"$file#page=${slot + 1}"))
 
   // ---------------------------------------------------------------
   // pdf_text_extract: the SQL-emitted fixture, raw + FlateDecode legs
@@ -1726,9 +1670,6 @@ object Pdf extends QueryModule {
   private val RawLen = ContentPre.length + L1Hex + ContentMid1.length + H1Hex +
     ContentMid2.length + 2 * H2Hex + ContentPost.length
   private val ZlibLen = RawLen + 11 // 2 CMF/FLG + 5 stored header + 4 adler
-
-  private def hexOf(s: String): String =
-    s.getBytes("US-ASCII").map("%02X".format(_)).mkString
 
   /** Constant skeleton around the content stream: (hexA, hexB) with the
     * stream data spliced between. Offsets accumulate while building, so
@@ -2246,16 +2187,10 @@ object Pdf extends QueryModule {
       .agg(expr("transform(array_sort(collect_list(struct(doc_id, l1, l2))), " +
         "x -> named_struct('_1', x.l1, '_2', x.l2))").as("pages"))
       .select((col("g") * 2 + col("c")).as("fid"), col("c"), col("pages"))
-    grouped.as[(Long, Long, Seq[(String, String)])].foreachPartition {
-      (rows: Iterator[(Long, Long, Seq[(String, String)])]) =>
-        // plain java.nio IO — see Warc.warcFilesIngest (Hadoop local FS
-        // forks a chmod process per file without the native library)
-        rows.foreach { case (fid, c, pages) =>
-          val pdf = buildPdf(pages.map(p => Seq(p._1, p._2)), flate = c == 1,
-            xrefStream = fid % 4 >= 2)
-          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$fid.pdf"), pdf)
-        }
-    }
+    Streams.land(grouped.as[(Long, Long, Seq[(String, String)])].map { case (fid, c, pages) =>
+      (s"$fid.pdf", buildPdf(pages.map(p => Seq(p._1, p._2)), flate = c == 1,
+        xrefStream = fid % 4 >= 2))
+    }, dir)
     // re-ingest through the PRODUCTION front door; the fixture's 2-line
     // page shape (id, H-sentinel hex) unpacks declaratively, loud when
     // the shape is wrong

@@ -1,32 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{col, regexp_extract}
 
 /** Shared task-side stream plumbing for the container/drop front doors
-  * (WARC/TAR/ZIP/JSONL): the magic-sniffed incremental decompressor
-  * dispatch, the close-on-exhaust iterator wrapper, and the DISTRIBUTED
-  * landing-bucket lister every path-walk front door routes through. One
-  * definition — the walks themselves stay format-specific.
+  * (WARC/TAR/ZIP/PDF/JSONL): the magic-sniffed incremental decompressor
+  * dispatch, the close-on-exhaust stream walk, the DISTRIBUTED
+  * landing-bucket lister every path-walk front door routes through, and
+  * the fixture landing writer. The front doors themselves are one
+  * [[Container]] trait; each format supplies only its record walks.
   */
 private[graft] object Streams {
 
-  /** Distributed landing-bucket listing: every `<id><ext>` drop file under
-    * `dir` as `(id, path)`, with the driver paying exactly ONE
-    * `listStatus` at the root — O(direct children), never O(files).
-    * Root-level children split into drop files (matched in hand) and
-    * subdirectories; each subdirectory's full recursive walk runs INSIDE
-    * a task via a lazy `listStatusIterator` chain (O(one listing page) of
-    * task memory), so a crawl-scale bucket — 10⁶–10⁷ files sharded into
-    * prefix dirs, the layout every real landing zone uses — lists at
-    * cluster parallelism instead of serially on the driver.
-    *
-    * `fileRe` must FULL-match the drop file NAME with group 1 the numeric
-    * file id; non-matching names are skipped silently (landing dirs are
-    * never clean). `listStatus`/`listStatusIterator`, NOT `listFiles`:
-    * LocatedFileStatus eagerly loads each file's permissions, which on a
-    * local FS without the native-hadoop library forks a shell process per
-    * file (measured ~25 s for 6k files).
-    */
   /** One root `listStatus`, split into matched root-level drop files
     * (with their total on-disk bytes — free from the FileStatus) and
     * subdirectories whose walks must run task-side.
@@ -53,6 +39,23 @@ private[graft] object Streams {
     RootListing(rootFiles.toSeq, rootBytes, subDirs.toSeq)
   }
 
+  /** Distributed landing-bucket listing: every `<id><ext>` drop file under
+    * `dir` as `(id, path)`, with the driver paying exactly ONE
+    * `listStatus` at the root — O(direct children), never O(files).
+    * Root-level children split into drop files (matched in hand) and
+    * subdirectories; each subdirectory's full recursive walk runs INSIDE
+    * a task via a lazy `listStatusIterator` chain (O(one listing page) of
+    * task memory), so a crawl-scale bucket — 10⁶–10⁷ files sharded into
+    * prefix dirs, the layout every real landing zone uses — lists at
+    * cluster parallelism instead of serially on the driver.
+    *
+    * `fileRe` must FULL-match the drop file NAME with group 1 the numeric
+    * file id; non-matching names are skipped silently (landing dirs are
+    * never clean). `listStatus`/`listStatusIterator`, NOT `listFiles`:
+    * LocatedFileStatus eagerly loads each file's permissions, which on a
+    * local FS without the native-hadoop library forks a shell process per
+    * file (measured ~25 s for 6k files).
+    */
   def listDrops(spark: SparkSession, dir: String, fileRe: String): Dataset[(Long, String)] =
     assembleDrops(spark, fileRe, listRoot(spark, dir, fileRe))
 
@@ -87,6 +90,13 @@ private[graft] object Streams {
         })
   }
 
+  /** Target per-task archive bytes for a fully-listed (root-level) bucket —
+    * the scan-split calculus of guide §6 (`maxPartitionBytes`) applied to
+    * drop-file read tasks: a task should own enough bytes that its fixed
+    * scheduling cost is amortized.
+    */
+  private val DropShardTargetBytes = 32L << 20
+
   /** [[listDrops]] sharded into walk tasks at 4× cluster parallelism —
     * proportional to the CLUSTER, not a constant cap: the shuffle
     * carries only (id, path) tuples, empty partitions on a small bucket
@@ -96,18 +106,11 @@ private[graft] object Streams {
     * which co-locates any DUPLICATE id — the same numeric name landed in
     * two subdirs would otherwise ingest twice and collide in the
     * `fileId << 24` doc_id space downstream — so the walk rejects it
-    * loudly instead. All four path-walk front doors (JSONL/TAR/ZIP/WARC)
-    * and the `*_files_ingest` re-ingests route through here.
+    * loudly instead. [[Container.docsFromPaths]] (the path door of all
+    * five formats) and the `*_files_ingest` fixture walks route through
+    * here.
     */
-  /** Target per-task archive bytes for a fully-listed (root-level) bucket —
-    * the scan-split calculus of guide §6 (`maxPartitionBytes`) applied to
-    * drop-file read tasks: a task should own enough bytes that its fixed
-    * scheduling cost is amortized.
-    */
-  private val DropShardTargetBytes = 32L << 20
-
   def dropTasks(spark: SparkSession, dir: String, fileRe: String): Dataset[(Long, String)] = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // r19 (size-adaptive fan-out — the r18 scaling block measured the
     // *_files_ingest rows SLOWER at 32 cores than 8, pure empty-task
@@ -141,6 +144,19 @@ private[graft] object Streams {
         }
       }
   }
+
+  /** [[dropTasks]] walked: `walk(fileId, fs, path)` runs inside the task
+    * that owns each drop file, with the file's own Hadoop filesystem.
+    */
+  def walkDrops[T: Encoder](spark: SparkSession, dir: String, fileRe: String)(
+      walk: (Long, FileSystem, Path) => Iterator[T]): Dataset[T] =
+    dropTasks(spark, dir, fileRe).mapPartitions { ps =>
+      val conf = new org.apache.hadoop.conf.Configuration()
+      ps.flatMap { case (fileId, p) =>
+        val path = new Path(p)
+        walk(fileId, path.getFileSystem(conf), path)
+      }
+    }
 
   /** Sniff the stream head and wrap with the matching INCREMENTAL
     * decompressor — `GZIPInputStream` (multi-member concat, per-member
@@ -186,4 +202,139 @@ private[graft] object Streams {
         try it.next()
         catch { case e: Throwable => if (open) { open = false; in.close() }; throw e }
     }
+
+  /** Open `path` and walk the stream, closing it when the walk exhausts
+    * or first fails — also when `walk` fails before yielding anything
+    * (a stream too short for any magic).
+    */
+  def streamWalk[T](fs: FileSystem, path: Path)(
+      walk: java.io.InputStream => Iterator[T]): Iterator[T] = {
+    val in = fs.open(path)
+    try closeOnExhaust(walk(in), in)
+    catch { case e: Throwable => in.close(); throw e }
+  }
+
+  /** The schema of a `binaryFile` stream source (a stream needs it declared). */
+  val BinaryFileSchema = "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
+
+  /** Land `(file name, bytes)` rows as files in `dir`, each written by the
+    * task holding it. java.nio writes: Hadoop's local FS without the
+    * native library forks a chmod PROCESS per created file (~5 ms each —
+    * measured 34 s for 6.1k fixture files); the landing dir is task-local
+    * scratch, so plain file IO is the honest tool here.
+    */
+  def land(files: Dataset[(String, Array[Byte])], dir: String): Unit =
+    files.foreachPartition { (rows: Iterator[(String, Array[Byte])]) =>
+      rows.foreach { case (name, bytes) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), bytes)
+      }
+    }
+}
+
+/** One landing-bucket container format behind the three document front
+  * doors. A format supplies its label, one drop-file name regex, an
+  * in-memory record walk, a by-path record walk and the record→document
+  * mapping; [[docsFromFiles]], [[docStream]] and [[docsFromPaths]] are
+  * written here once, so the file-id match, the doc_id packing with its
+  * slot guards, the codepoint count and the document row exist in one
+  * place. `Warc`, `Tar`, `Zip`, `Pdf` and `Jsonl` mix it in.
+  *
+  * doc_id = fileId·2²⁴ + record slot: stable across replays, and
+  * collision-free for files under 16M records. Every record the walk
+  * yields owns a slot, also the ones [[doc]] skips (WARC non-`response`
+  * records, non-`.txt` archive members), so ids stay stable over the
+  * records a format skips. Overflow of either field rejects loudly; the
+  * file-id guard runs before the file is walked.
+  */
+private[graft] trait Container[R] extends Serializable {
+
+  /** Format name in reject messages. */
+  protected def label: String
+
+  /** The drop-file name with group 1 the numeric file id, e.g.
+    * `([0-9]+)\.zip`. Both doors match it case-insensitively against the
+    * whole file name: the batch door over binaryFile's `path`, the path
+    * door in [[Streams.dropTasks]].
+    */
+  protected def fileRe: String
+
+  /** The records of one file held in memory (a binaryFile `content`). */
+  protected def bytesWalk(bytes: Array[Byte]): Iterator[R]
+
+  /** The records of one file read by path, never the whole file resident
+    * where the format allows it. Closes what it opens once drained.
+    */
+  protected def pathWalk(fs: FileSystem, path: Path): Iterator[R]
+
+  /** Record `slot` of drop file `file` as `(text, lang, source)`, or
+    * None when the record is not a document.
+    */
+  protected def doc(file: String, slot: Int, r: R): Option[(String, String, String)]
+
+  protected def utf8(bytes: Array[Byte]): String =
+    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Regex group `g` of [[fileRe]] over a binaryFile frame's `path`. */
+  protected def pathGroup(g: Int): org.apache.spark.sql.Column =
+    regexp_extract(col("path"), s"(?i)(?:^|/)$fileRe$$", g)
+
+  /** Drop files → `documents`-shaped rows, from a batch OR streaming
+    * binaryFile frame (the streaming form feeds
+    * [[graft.streaming.CorpusIngest.start]]). Names that do not match
+    * [[fileRe]] are skipped: landing dirs are never clean.
+    */
+  def docsFromFiles(files: DataFrame): DataFrame = {
+    import files.sparkSession.implicits._
+    docRows(files
+      .select(pathGroup(1).try_cast("long").as("file_id"),
+        regexp_extract(col("path"), "([^/]+)$", 1).as("name"), col("content"))
+      .filter(col("file_id").isNotNull)
+      .as[(Long, String, Array[Byte])]
+      .mapPartitions(_.flatMap { case (fileId, name, bytes) =>
+        docs(fileId, name)(bytesWalk(bytes))
+      }))
+  }
+
+  /** The streaming landing shape: drops appearing in `dir` stream through
+    * binaryFile into document rows, micro-batch by micro-batch.
+    */
+  def docStream(spark: SparkSession, dir: String): DataFrame =
+    docsFromFiles(spark.readStream.format("binaryFile")
+      .schema(Streams.BinaryFileSchema).load(dir))
+
+  /** [[docsFromFiles]] by PATH — the huge-drop front door: the bucket
+    * lists DISTRIBUTED via [[Streams.dropTasks]] (one root `listStatus`
+    * on the driver, sharded prefix subdirs walked inside tasks, so drops
+    * any depth down are ingested too) and each task walks its files
+    * through [[pathWalk]], past binaryFile's 2 GiB content cap. Same
+    * doc_id scheme and row shape as [[docsFromFiles]] (parity-pinned in
+    * each format's spec).
+    */
+  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    docRows(Streams.walkDrops(spark, dir, s"(?i)^$fileRe$$") { (fileId, fs, path) =>
+      docs(fileId, path.getName)(pathWalk(fs, path))
+    })
+  }
+
+  private def docs(fileId: Long, file: String)(
+      walk: => Iterator[R]): Iterator[(Long, String, String, String, Long)] = {
+    // fileId fills the high 39 bits of doc_id; a larger numeric name would
+    // overflow the shift and collide across files
+    require(fileId < (1L << 39),
+      s"$label file id $fileId exceeds the 2^39 doc_id file-slot space")
+    walk.zipWithIndex.flatMap { case (r, i) =>
+      require(i < (1 << 24),
+        s"$label file $fileId: record $i exceeds the 2^24 doc_id slot space")
+      doc(file, i, r).map { case (text, lang, source) =>
+        // codepoints, matching Spark/DuckDB length(text) — NOT UTF-16
+        // code units, which double-count non-BMP chars
+        ((fileId << 24) | i, text, lang, source,
+          text.codePointCount(0, text.length).toLong)
+      }
+    }
+  }
+
+  private def docRows(rows: Dataset[(Long, String, String, String, Long)]): DataFrame =
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.{byte, gzMemberHex, hexOf}
 
 /** TAR archive ingestion — the other container corpora land in (datasets
   * ship as `.tar` / `.tar.gz` bundles of text files at least as often as
@@ -19,7 +20,7 @@ import graft.{QueryModule, Tables}
   * like every landing-path parser; a bucket of archives parallelizes at
   * file grain through `binaryFile`.
   */
-object Tar extends QueryModule {
+object Tar extends QueryModule with Container[(String, Array[Byte])] {
 
   /** Parse the octal number in `[off, off+len)`: digits terminated by
     * NUL/space (leading spaces legal). Rejects loudly on non-octal
@@ -179,86 +180,24 @@ object Tar extends QueryModule {
       entries(graft.functions.Lz4Inflate.inflate(bytes))
     else entries(bytes)
 
-  /** Tar files → `documents`-shaped rows: `.txt` entries of a landing
-    * bucket of `<id>.tar[.gz|.zst]` archives become documents (doc_id =
-    * fileId·2²⁴ + entry index, the [[Warc.docsFromFiles]] scheme; lang
-    * `und`, source = entry name, codepoint n_chars). The batch twin of
-    * the WARC front door for tarball-shipped corpora.
-    */
-  def docsFromFiles(files: DataFrame): DataFrame = {
-    import files.sparkSession.implicits._
-    files
-      .select(
-        expr("try_cast(regexp_extract(path, '(?i)(?:^|/)([0-9]+)\\\\.tar(\\\\.gz|\\\\.zst)?$', 1) as long)")
-          .as("file_id"),
-        col("content"))
-      .filter(col("file_id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(16).flatMap { batch =>
-          batch.iterator.flatMap { case (fileId, bytes) =>
-            val es = read(bytes)
-            require(es.length < (1 << 24),
-              s"tar file $fileId: ${es.length} entries exceed the 2^24 doc_id slot space")
-            // fileId occupies the high 39 bits of doc_id; a larger numeric
-            // filename would overflow the shift and collide across files
-            require(fileId < (1L << 39),
-              s"tar file id $fileId exceeds the 2^39 doc_id file-slot space")
-            es.zipWithIndex.collect {
-              case ((name, payload), i) if name.endsWith(".txt") =>
-                val text = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-                ((fileId << 24) | i, text, "und", name,
-                  text.codePointCount(0, text.length).toLong)
-            }
-          }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  // ---- the front doors: a bucket of `<id>.tar[.gz|.zst|.lz4]` archives ----
+  // `.txt` entries become documents (lang `und`, source = entry name); the
+  // path door streams larger-than-memory `.tar.zst` corpus bundles through
+  // [[readStream]] with O(one member) memory per task.
 
-  /** [[docsFromFiles]] by PATH — the huge-tarball front door: the bucket
-    * lists DISTRIBUTED via [[Streams.dropTasks]] (one root `listStatus`
-    * on the driver, sharded prefix subdirs walked inside tasks) and each
-    * task STREAMS its archives through [[readStream]] (plain/gzip/zstd
-    * all incremental), so a bucket of larger-than-memory `.tar.zst`
-    * corpus bundles ingests with O(one member) memory per task. Same
-    * doc_id scheme and row shape as [[docsFromFiles]] (parity-pinned in
-    * TarSpec).
-    */
-  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Streams.dropTasks(spark, dir, "(?i)^([0-9]+)\\.tar(\\.gz|\\.zst)?$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (fileId, p) =>
-          require(fileId < (1L << 39),
-            s"tar file id $fileId exceeds the 2^39 doc_id file-slot space")
-          val path = new org.apache.hadoop.fs.Path(p)
-          val in = path.getFileSystem(conf).open(path)
-          Streams.closeOnExhaust(readStream(in), in).zipWithIndex
-            .map { case (e, i) =>
-              require(i < (1 << 24),
-                s"tar file $fileId: entry $i exceeds the 2^24 doc_id slot space")
-              (e, i)
-            }
-            .collect { case (((name, payload), i)) if name.endsWith(".txt") =>
-              val text = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-              ((fileId << 24) | i, text, "und", name,
-                text.codePointCount(0, text.length).toLong)
-            }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  protected def label = "tar"
+  protected def fileRe = "([0-9]+)\\.tar(\\.gz|\\.zst|\\.lz4)?"
+  protected def bytesWalk(bytes: Array[Byte]) = read(bytes).iterator
+  protected def pathWalk(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path) =
+    Streams.streamWalk(fs, path)(readStream)
+  protected def doc(file: String, slot: Int, e: (String, Array[Byte])) =
+    if (e._1.endsWith(".txt")) Some((utf8(e._2), "und", e._1)) else None
 
   /** Payload slice geometry for the fixture: two 48-byte file entries per
     * document (text bytes [0,48) and [16,64)).
     */
   private val SliceLen = 48
   private val NeedBytes = 64
-
-  private def hexOf(s: String): String =
-    s.getBytes("US-ASCII").map("%02X".format(_)).mkString
 
   /** Hex of a constant header region, and its byte sum (for the Scala-side
     * checksum constant).
@@ -323,35 +262,16 @@ object Tar extends QueryModule {
       .filter(octet_length(col("text")) >= NeedBytes)
       .withColumn("h", expr("hex(cast(text as binary))"))
       .select(col("doc_id"), unhex(expr(tarHex)).as("payload"))
-    files.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { case (id, bytes) =>
-          entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
-            var sum = 0L
-            payload.foreach(b => sum += (b & 0xff))
-            (id, i, name, payload.length, sum)
-          }
-        }
+    files.as[(Long, Array[Byte])].flatMap { case (id, bytes) =>
+      entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
+        var sum = 0L
+        payload.foreach(b => sum += (b & 0xff))
+        (id, i, name, payload.length, sum)
       }
     }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
       .select(col("doc_id"), col("entry_no").cast("int"), col("name"),
         col("size_bytes").cast("int"), col("payload_sum"))
       .orderBy("doc_id", "entry_no")
-  }
-
-  /** Gzip member (stored-deflate) over `rawHex`, a CONSTANT-length blob
-    * of `n` bytes — constant framing, real CRC-32/ISIZE (the `warc_ingest`
-    * construction).
-    */
-  private def gzMemberHex(rawHex: String, n: Int): String = {
-    val lenHex = "%02X%02X".format(n & 0xff, n >> 8)
-    val nlenHex = "%02X%02X".format(~n & 0xff, (~n >> 8) & 0xff)
-    val isizeHex = "%02X%02X%02X%02X".format(
-      n & 0xff, (n >> 8) & 0xff, (n >> 16) & 0xff, (n >> 24) & 0xff)
-    val crcBe = s"lpad(hex(crc32(unhex($rawHex))), 8, '0')"
-    val crcLe = s"concat(substring($crcBe, 7, 2), substring($crcBe, 5, 2), " +
-      s"substring($crcBe, 3, 2), substring($crcBe, 1, 2))"
-    s"concat('1F8B0800000000000003', '01$lenHex$nlenHex', $rawHex, $crcLe, '$isizeHex')"
   }
 
   /** Constant gzip member holding the 1024-byte two-zero-block tail. */
@@ -405,44 +325,28 @@ object Tar extends QueryModule {
       .groupBy("p", "g")
       .agg(expr("array_join(transform(array_sort(collect_list(struct(doc_id, ph))), x -> x.ph), '')")
         .as("body"))
-      .select((col("g") * 2 + col("p")).as("fid"),
-        when(col("p") === 0, lit(".tar")).otherwise(lit(".tar.gz")).as("ext"),
+      .select(concat((col("g") * 2 + col("p")).cast("string"),
+          when(col("p") === 0, lit(".tar")).otherwise(lit(".tar.gz"))).as("name"),
         unhex(concat(col("body"),
           when(col("p") === 0, lit("00" * 1024)).otherwise(lit(gzTailHex)))).as("payload"))
-    grouped.as[(Long, String, Array[Byte])].foreachPartition {
-      (rows: Iterator[(Long, String, Array[Byte])]) =>
-        // java.nio writes: Hadoop's local FS without the native library
-        // forks a chmod PROCESS per created file (~5 ms each — measured
-        // 34 s for 6.1k fixture files); the landing dir is task-local
-        // scratch, so plain file IO is the honest tool here
-        rows.foreach { case (id, ext, bytes) =>
-          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$id$ext"), bytes)
-        }
-    }
+    Streams.land(grouped.as[(String, Array[Byte])], dir)
     val nameRe = "^(doc|meta)([0-9]+)\\.(txt|bin)$".r
-    Streams.dropTasks(spark, dir, "^([0-9]+)\\.tar(\\.gz)?$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (_, p) =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val in = path.getFileSystem(conf).open(path)
-          Streams.closeOnExhaust(readStream(in), in).map { case (name, payload) =>
-            val m = nameRe.findFirstMatchIn(name).getOrElse(
-              throw new IllegalArgumentException(s"tar fixture: unattributable entry '$name'"))
-            var sum = 0L
-            payload.foreach(b => sum += (b & 0xff))
-            (m.group(2).toLong, if (m.group(1) == "doc") 0 else 1,
-              name, payload.length, sum)
-          }
-        }
-      }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
+    Streams.walkDrops(spark, dir, "^([0-9]+)\\.tar(\\.gz)?$") { (_, fs, path) =>
+      Streams.streamWalk(fs, path)(readStream).map { case (name, payload) =>
+        val m = nameRe.findFirstMatchIn(name).getOrElse(
+          throw new IllegalArgumentException(s"tar fixture: unattributable entry '$name'"))
+        var sum = 0L
+        payload.foreach(b => sum += (b & 0xff))
+        (m.group(2).toLong, if (m.group(1) == "doc") 0 else 1,
+          name, payload.length, sum)
+      }
+    }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
       .select(col("doc_id"), col("entry_no").cast("int"), col("name"),
         col("size_bytes").cast("int"), col("payload_sum"))
       .orderBy("doc_id", "entry_no")
   }
 
   private val tarIngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes

@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.{byte, gzMemberHex, hexOf}
+
+/** One parsed WARC record: ordered header fields + raw payload. */
+final case class WarcRecord(headers: Map[String, String], payload: Array[Byte])
 
 /** WARC ingestion — the container web-crawl training corpora actually
   * arrive in (Common Crawl publishes WARC/WET/WAT; every record is a
@@ -24,10 +28,7 @@ import graft.{QueryModule, Tables}
   * shuffles but the result rows. Record-per-member gzip is WHY the format
   * scales: a 100 TB crawl splits at member boundaries with no coordination.
   */
-object Warc extends QueryModule {
-
-  /** One parsed WARC record: ordered header fields + raw payload. */
-  final case class WarcRecord(headers: Map[String, String], payload: Array[Byte])
+object Warc extends QueryModule with Container[WarcRecord] {
 
   /** Parse every record in a (decompressed) WARC stream: `WARC/1.0` CRLF,
     * `Name: value` header lines to a blank line, `Content-Length` payload
@@ -200,33 +201,12 @@ object Warc extends QueryModule {
   private val RespHdr =
     s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: http://example.com/doc\r\nContent-Length: $RespLen\r\n\r\n"
 
-  private def hexOf(s: String): String =
-    s.getBytes("US-ASCII").map("%02X".format(_)).mkString
-
   /** Hex expression for one complete record (header + payload slice of the
     * document + the two-CRLF separator). `from` is a 0-based byte offset
     * into the document text.
     */
   private def recordHex(hdr: String, from: Int, len: Int): String =
     s"concat('${hexOf(hdr)}', substring(h, ${from * 2} + 1, ${len * 2}), '0D0A0D0A')"
-
-  /** Hex expression wrapping `rawHex` (a CONSTANT-length record of `n`
-    * bytes) as one complete gzip member with a stored deflate block: the
-    * 10-byte header (OS=03), BFINAL/BTYPE=stored + LEN/~LEN little-endian
-    * (constants — the record length is fixed), the raw bytes, then the
-    * CRC-32 of the raw bytes via Spark's native `crc32` (byte-swapped to
-    * the trailer's little-endian order) and the constant ISIZE.
-    */
-  private def gzMemberHex(rawHex: String, n: Int): String = {
-    val lenHex = "%02X%02X".format(n & 0xff, n >> 8)
-    val nlenHex = "%02X%02X".format(~n & 0xff, (~n >> 8) & 0xff)
-    val isizeHex = "%02X%02X%02X%02X".format(
-      n & 0xff, (n >> 8) & 0xff, (n >> 16) & 0xff, (n >> 24) & 0xff)
-    val crcBe = s"lpad(hex(crc32(unhex($rawHex))), 8, '0')"
-    val crcLe = s"concat(substring($crcBe, 7, 2), substring($crcBe, 5, 2), " +
-      s"substring($crcBe, 3, 2), substring($crcBe, 1, 2))"
-    s"concat('1F8B0800000000000003', '01$lenHex$nlenHex', $rawHex, $crcLe, '$isizeHex')"
-  }
 
   /** `warc_ingest`: the web-crawl landing format, parsed END TO END. Spark
     * BUILDS a genuine two-record WARC file per document (a `warcinfo`
@@ -261,15 +241,11 @@ object Warc extends QueryModule {
       .withColumn("h", expr("hex(cast(text as binary))"))
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, expr(plain)).otherwise(expr(gz)).as("payload"))
-    files.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { case (id, bytes) =>
-          read(bytes).zipWithIndex.map { case (r, i) =>
-            var sum = 0L
-            r.payload.foreach(b => sum += (b & 0xff))
-            (id, i, r.headers("WARC-Type"), r.payload.length, sum)
-          }
-        }
+    files.as[(Long, Array[Byte])].flatMap { case (id, bytes) =>
+      read(bytes).zipWithIndex.map { case (r, i) =>
+        var sum = 0L
+        r.payload.foreach(b => sum += (b & 0xff))
+        (id, i, r.headers("WARC-Type"), r.payload.length, sum)
       }
     }.toDF("doc_id", "record_no", "warc_type", "content_length", "payload_sum")
       .select(col("doc_id"), col("record_no").cast("int"), col("warc_type"),
@@ -278,7 +254,6 @@ object Warc extends QueryModule {
   }
 
   private val warcIngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes
@@ -341,105 +316,27 @@ object Warc extends QueryModule {
         FROM documents WHERE octet_length(encode(text)) >= 1
         ORDER BY doc_id"""
 
-  /** WARC files → `documents`-shaped rows: the PRODUCTION corpus front
-    * door (a landing bucket of `<id>.warc` / `<id>.warc.gz` crawl files
-    * → the same document schema every downstream operator consumes).
-    * Each file's records parse where its bytes are read ([[read]]: gzip
-    * members verified, Content-Length framing walked); `response`
-    * records become documents — doc_id = fileId·2²⁴ + record index
-    * (stable across replays; collision-free for files under 16M records,
-    * enforced), lang from the crawl's own
-    * `WARC-Identified-Content-Language` header when present (the field
-    * Common Crawl emits) else `und`, source from `WARC-Target-URI`.
-    * Works on a batch OR streaming binaryFile frame — the streaming form
-    * feeds [[graft.streaming.CorpusIngest.start]] directly, which is the
-    * full production path: crawl bucket → records → QC → contamination →
-    * dedup probe → trainer chunks, exactly-once (WarcSpec pins the
-    * stream-equals-batch convergence).
-    */
-  def docsFromFiles(files: DataFrame): DataFrame = {
-    import files.sparkSession.implicits._
-    files
-      .select(
-        expr("try_cast(regexp_extract(path, '(?i)(?:^|/)([0-9]+)\\\\.warc(\\\\.gz)?$', 1) as long)")
-          .as("file_id"),
-        col("content"))
-      .filter(col("file_id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(16).flatMap { batch =>
-          batch.iterator.flatMap { case (fileId, bytes) =>
-            val recs = read(bytes)
-            // 2^24 record slots per file: a production Common Crawl WARC holds
-            // ~150k records, so 16M is generous headroom — and overflow must
-            // reject loudly, not silently collide doc_ids across files.
-            require(recs.length < (1 << 24),
-              s"WARC file $fileId: ${recs.length} records exceed the 2^24 doc_id slot space")
-            // fileId occupies the high 39 bits of doc_id; a larger numeric
-            // filename would overflow the shift and collide across files
-            require(fileId < (1L << 39),
-              s"WARC file id $fileId exceeds the 2^39 doc_id file-slot space")
-            recs.zipWithIndex.collect {
-              case (r, i) if r.headers.get("WARC-Type").contains("response") =>
-                val text = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
-                ((fileId << 24) | i, text,
-                  r.headers.getOrElse("WARC-Identified-Content-Language", "und"),
-                  r.headers.getOrElse("WARC-Target-URI", "unknown"),
-                  // codepoint count, matching Spark/DuckDB length(text) — NOT
-                  // UTF-16 code units, which double-count non-BMP chars
-                  text.codePointCount(0, text.length).toLong)
-            }
-          }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  // ---- the front doors: a crawl bucket of `<id>.warc[.gz]` files ----
+  // `response` records become documents: lang from the crawl's own
+  // `WARC-Identified-Content-Language` header (the field Common Crawl
+  // emits) else `und`, source from `WARC-Target-URI`. The streaming door
+  // feeds [[graft.streaming.CorpusIngest.start]] — crawl bucket → records
+  // → QC → contamination → dedup probe → trainer chunks, exactly-once
+  // (WarcSpec pins the stream-equals-batch convergence); the path door
+  // streams full-size Common Crawl segments through [[readStreamRecords]]
+  // (per-record gzip members inflate incrementally) with O(one record)
+  // memory per task.
 
-  /** The streaming landing shape: crawl files appearing in `dir` stream
-    * through binaryFile into document rows, micro-batch by micro-batch.
-    */
-  def docStream(spark: SparkSession, dir: String): DataFrame =
-    docsFromFiles(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
-
-  /** [[docsFromFiles]] by PATH — the huge-segment front door: the bucket
-    * lists DISTRIBUTED via [[Streams.dropTasks]] (one root `listStatus`
-    * on the driver, sharded prefix subdirs walked inside tasks) and each
-    * task STREAMS its crawl files through [[readStreamRecords]]
-    * (per-record gzip members inflate incrementally), so full-size
-    * Common Crawl segments ingest with O(one record) memory per task.
-    * Same doc_id scheme and row shape as [[docsFromFiles]]
-    * (parity-pinned in WarcSpec).
-    */
-  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Streams.dropTasks(spark, dir, "(?i)^([0-9]+)\\.warc(\\.gz)?$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (fileId, p) =>
-          require(fileId < (1L << 39),
-            s"WARC file id $fileId exceeds the 2^39 doc_id file-slot space")
-          val path = new org.apache.hadoop.fs.Path(p)
-          val in = path.getFileSystem(conf).open(path)
-          Streams.closeOnExhaust(readStreamRecords(in), in).zipWithIndex
-            .map { case (r, i) =>
-              require(i < (1 << 24),
-                s"WARC file $fileId: record $i exceeds the 2^24 doc_id slot space")
-              (r, i)
-            }
-            .collect {
-              case (r, i) if r.headers.get("WARC-Type").contains("response") =>
-                val text = new String(r.payload, java.nio.charset.StandardCharsets.UTF_8)
-                ((fileId << 24) | i, text,
-                  r.headers.getOrElse("WARC-Identified-Content-Language", "und"),
-                  r.headers.getOrElse("WARC-Target-URI", "unknown"),
-                  text.codePointCount(0, text.length).toLong)
-            }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  protected def label = "WARC"
+  protected def fileRe = "([0-9]+)\\.warc(\\.gz)?"
+  protected def bytesWalk(bytes: Array[Byte]) = read(bytes).iterator
+  protected def pathWalk(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path) =
+    Streams.streamWalk(fs, path)(readStreamRecords)
+  protected def doc(file: String, slot: Int, r: WarcRecord) =
+    if (!r.headers.get("WARC-Type").contains("response")) None
+    else Some((utf8(r.payload),
+      r.headers.getOrElse("WARC-Identified-Content-Language", "und"),
+      r.headers.getOrElse("WARC-Target-URI", "unknown")))
 
   /** `warc_files_ingest`: the STREAMING record walk pinned end to end
     * through REAL landed crawl files, at the realistic grain — each
@@ -487,43 +384,28 @@ object Warc extends QueryModule {
       .select(col("doc_id"), (col("doc_id") % 2).as("p"),
         expr(s"doc_id div ${2 * DocsPerFile}").as("g"),
         expr(hexSql).as("ph"))
-    val grouped = leg(0, pairPlain).unionByName(leg(1, pairGz))
+    Streams.land(leg(0, pairPlain).unionByName(leg(1, pairGz))
       .groupBy("p", "g")
       .agg(expr("array_join(transform(array_sort(collect_list(struct(doc_id, ph))), x -> x.ph), '')")
         .as("body"))
-      .select((col("g") * 2 + col("p")).as("fid"),
-        when(col("p") === 0, lit(".warc")).otherwise(lit(".warc.gz")).as("ext"),
+      .select(concat((col("g") * 2 + col("p")).cast("string"),
+          when(col("p") === 0, lit(".warc")).otherwise(lit(".warc.gz"))).as("name"),
         unhex(col("body")).as("payload"))
-    grouped.as[(Long, String, Array[Byte])].foreachPartition {
-      (rows: Iterator[(Long, String, Array[Byte])]) =>
-        // java.nio writes: Hadoop's local FS without the native library
-        // forks a chmod PROCESS per created file (~5 ms each — measured
-        // 34 s for 6.1k fixture files); the landing dir is task-local
-        // scratch, so plain file IO is the honest tool here
-        rows.foreach { case (id, ext, bytes) =>
-          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$id$ext"), bytes)
-        }
-    }
+      .as[(String, Array[Byte])], dir)
     val idRe = java.util.regex.Pattern.quote(IdTag) + "([0-9]+)>"
     val idR = idRe.r
-    Streams.dropTasks(spark, dir, "^([0-9]+)\\.warc(\\.gz)?$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (_, p) =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val in = path.getFileSystem(conf).open(path)
-          Streams.closeOnExhaust(readStreamRecords(in), in).map { r =>
-            val id = r.headers.get("WARC-Record-ID")
-              .flatMap(v => idR.findFirstMatchIn(v).map(_.group(1).toLong))
-              .getOrElse(throw new IllegalArgumentException(
-                s"warc fixture: unattributable record ${r.headers}"))
-            var sum = 0L
-            r.payload.foreach(b => sum += (b & 0xff))
-            (id, if (r.headers("WARC-Type") == "warcinfo") 0 else 1,
-              r.headers("WARC-Type"), r.payload.length, sum)
-          }
-        }
-      }.toDF("doc_id", "record_no", "warc_type", "content_length", "payload_sum")
+    Streams.walkDrops(spark, dir, "^([0-9]+)\\.warc(\\.gz)?$") { (_, fs, path) =>
+      Streams.streamWalk(fs, path)(readStreamRecords).map { r =>
+        val id = r.headers.get("WARC-Record-ID")
+          .flatMap(v => idR.findFirstMatchIn(v).map(_.group(1).toLong))
+          .getOrElse(throw new IllegalArgumentException(
+            s"warc fixture: unattributable record ${r.headers}"))
+        var sum = 0L
+        r.payload.foreach(b => sum += (b & 0xff))
+        (id, if (r.headers("WARC-Type") == "warcinfo") 0 else 1,
+          r.headers("WARC-Type"), r.payload.length, sum)
+      }
+    }.toDF("doc_id", "record_no", "warc_type", "content_length", "payload_sum")
       .select(col("doc_id"), col("record_no").cast("int"), col("warc_type"),
         col("content_length").cast("int"), col("payload_sum"))
       .orderBy("doc_id", "record_no")
@@ -627,18 +509,14 @@ object Warc extends QueryModule {
       .select(col("doc_id"),
         unhex(when(col("doc_id") % 2 === 0, expr(even)).otherwise(expr(odd)))
           .as("payload"))
-    files.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { case (id, bytes) =>
-          records(bytes).collect {
-            case r if r.headers.get("WARC-Type").contains("response") =>
-              val http = httpSplit(r.payload)
-              val cs = httpCharset(http.headers)
-              val text = new String(http.body, java.nio.charset.Charset.forName(cs))
-              (id, http.status, cs, text,
-                text.codePointCount(0, text.length).toLong)
-          }
-        }
+    files.as[(Long, Array[Byte])].flatMap { case (id, bytes) =>
+      records(bytes).collect {
+        case r if r.headers.get("WARC-Type").contains("response") =>
+          val http = httpSplit(r.payload)
+          val cs = httpCharset(http.headers)
+          val text = new String(http.body, java.nio.charset.Charset.forName(cs))
+          (id, http.status, cs, text,
+            text.codePointCount(0, text.length).toLong)
       }
     }.toDF("doc_id", "status", "charset", "text", "n_chars")
       .select(col("doc_id"), col("status"), col("charset"),

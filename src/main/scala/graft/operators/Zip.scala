@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.byte
 
 /** ZIP archive ingestion — the third container corpora land in (alongside
   * tarballs and WARC dumps: scraped datasets, Kaggle-style drops, and
@@ -29,7 +30,7 @@ import graft.{QueryModule, Tables}
   * ingestion generalizes that front door to how large corpora actually
   * arrive.
   */
-object Zip extends QueryModule {
+object Zip extends QueryModule with Container[(String, Array[Byte])] {
 
   private def le16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
@@ -303,101 +304,24 @@ object Zip extends QueryModule {
         in.readFully(dataOff, raw, 0, raw.length)
         rec.name -> decodeMember(rec, raw, 0)
       }
-      new Iterator[(String, Array[Byte])] {
-        private var open = true
-        def hasNext: Boolean = {
-          val h = open && base.hasNext
-          if (open && !h) { open = false; closeQuietly() }
-          h
-        }
-        def next(): (String, Array[Byte]) =
-          try base.next()
-          catch { case e: Throwable => if (open) { open = false; closeQuietly() }; throw e }
-      }
+      Streams.closeOnExhaust(base, in)
     } catch { case e: Throwable => closeQuietly(); throw e }
   }
 
-  /** Zip files → `documents`-shaped rows: `.txt` members of a landing
-    * bucket of `<id>.zip` archives become documents (doc_id =
-    * fileId·2²⁴ + member index — the [[Warc.docsFromFiles]] scheme).
-    */
-  def docsFromFiles(files: DataFrame): DataFrame = {
-    import files.sparkSession.implicits._
-    files
-      .select(
-        expr("try_cast(regexp_extract(path, '(?i)(?:^|/)([0-9]+)\\\\.zip$', 1) as long)")
-          .as("file_id"),
-        col("content"))
-      .filter(col("file_id").isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(16).flatMap { batch =>
-          batch.iterator.flatMap { case (fileId, bytes) =>
-            val es = entries(bytes)
-            require(es.length < (1 << 24),
-              s"zip file $fileId: ${es.length} members exceed the 2^24 doc_id slot space")
-            // fileId occupies the high 39 bits of doc_id; a larger numeric
-            // filename would overflow the shift and collide across files
-            require(fileId < (1L << 39),
-              s"zip file id $fileId exceeds the 2^39 doc_id file-slot space")
-            es.zipWithIndex.collect {
-              case ((name, payload), i) if name.endsWith(".txt") =>
-                val text = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-                ((fileId << 24) | i, text, "und", name,
-                  text.codePointCount(0, text.length).toLong)
-            }
-          }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
+  // ---- the front doors: a bucket of `<id>.zip` archives ----
+  // `.txt` members become documents (lang `und`, source = member name);
+  // the path door seek-walks each archive via [[entriesFromFile]], so a
+  // bucket of >4 GiB ZIP64 drops ingests with O(directory + one member)
+  // memory per task. Archive grain is the unit of parallelism and of
+  // exactly-once tracking in the streaming door (the file-source log).
 
-  /** [[docsFromFiles]] by PATH — the huge-archive front door. The
-    * binaryFile form ships each archive's bytes through the scan (capped
-    * at 2 GiB per file); this form parallelizes the path list and each
-    * task seek-walks its archives via [[entriesFromFile]], so a bucket of
-    * >4 GiB ZIP64 drops ingests with O(directory + one member) memory per
-    * task. Same doc_id scheme and row shape as [[docsFromFiles]]
-    * (parity-pinned in ZipSpec).
-    */
-  def docsFromPaths(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // distributed listing — Streams.dropTasks: one root listStatus on
-    // the driver, sharded prefix subdirs walked inside tasks, walk
-    // parallelism 4× the cluster instead of a constant cap
-    Streams.dropTasks(spark, dir, "(?i)^([0-9]+)\\.zip$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        ps.flatMap { case (fileId, p) =>
-          require(fileId < (1L << 39),
-            s"zip file id $fileId exceeds the 2^39 doc_id file-slot space")
-          val path = new org.apache.hadoop.fs.Path(p)
-          entriesFromFile(path.getFileSystem(conf), path).zipWithIndex
-            .map { case (e, i) =>
-              require(i < (1 << 24),
-                s"zip file $fileId: member $i exceeds the 2^24 doc_id slot space")
-              (e, i)
-            }
-            .collect { case (((name, payload), i)) if name.endsWith(".txt") =>
-              val text = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-              ((fileId << 24) | i, text, "und", name,
-                text.codePointCount(0, text.length).toLong)
-            }
-        }
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
-
-  /** Streaming zip-bucket front door: `<id>.zip` drops land through the
-    * streaming binaryFile source and flow straight into
-    * [[graft.streaming.CorpusIngest]] — the dataset-drop twin of
-    * [[Warc.docStream]]'s crawl bucket. Archive grain is the unit of
-    * parallelism and of exactly-once tracking (the file-source log).
-    */
-  def docStream(spark: SparkSession, dir: String): DataFrame =
-    docsFromFiles(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+  protected def label = "zip"
+  protected def fileRe = "([0-9]+)\\.zip"
+  protected def bytesWalk(bytes: Array[Byte]) = entries(bytes).iterator
+  protected def pathWalk(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path) =
+    entriesFromFile(fs, path)
+  protected def doc(file: String, slot: Int, e: (String, Array[Byte])) =
+    if (e._1.endsWith(".txt")) Some((utf8(e._2), "und", e._1)) else None
 
   /** Fixture geometry: two 48-byte STORED members per document (text
     * bytes [0,48) and [16,64)), FIXED-WIDTH names (`d<12 digits>.txt` /
@@ -466,15 +390,11 @@ object Zip extends QueryModule {
       .filter(octet_length(col("text")) >= NeedBytes)
       .withColumn("h", expr("hex(cast(text as binary))"))
       .select(col("doc_id"), unhex(expr(zipHex)).as("payload"))
-    files.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { case (id, bytes) =>
-          entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
-            var sum = 0L
-            payload.foreach(b => sum += (b & 0xff))
-            (id, i, name, payload.length, sum)
-          }
-        }
+    files.as[(Long, Array[Byte])].flatMap { case (id, bytes) =>
+      entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
+        var sum = 0L
+        payload.foreach(b => sum += (b & 0xff))
+        (id, i, name, payload.length, sum)
       }
     }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
       .select(col("doc_id"), col("entry_no").cast("int"), col("name"),
@@ -539,15 +459,11 @@ object Zip extends QueryModule {
       .filter(octet_length(col("text")) >= NeedBytes)
       .withColumn("h", expr("hex(cast(text as binary))"))
       .select(col("doc_id"), unhex(expr(zipHex)).as("payload"))
-    files.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { case (id, bytes) =>
-          entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
-            var sum = 0L
-            payload.foreach(b => sum += (b & 0xff))
-            (id, i, name, payload.length, sum)
-          }
-        }
+    files.as[(Long, Array[Byte])].flatMap { case (id, bytes) =>
+      entries(bytes).zipWithIndex.map { case ((name, payload), i) =>
+        var sum = 0L
+        payload.foreach(b => sum += (b & 0xff))
+        (id, i, name, payload.length, sum)
       }
     }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
       .select(col("doc_id"), col("entry_no").cast("int"), col("name"),
@@ -586,44 +502,30 @@ object Zip extends QueryModule {
     // production multi-split union already has the write parallelism
     val payloads = graft.Scratch.fanOut(
       leg(0, classicZipHexSql).unionByName(leg(1, zip64ZipHexSql)))
-    // land the bucket where the rows are: each task writes its archives
-    // through the Hadoop FS (local here, object storage on a cluster)
-    payloads.as[(Long, Array[Byte])].foreachPartition {
-      (rows: Iterator[(Long, Array[Byte])]) =>
-        // java.nio writes: Hadoop's local FS without the native library
-        // forks a chmod PROCESS per created file (~5 ms each — measured
-        // 34 s for 6.1k fixture files); the landing dir is task-local
-        // scratch, so plain file IO is the honest tool here
-        rows.foreach { case (id, bytes) =>
-          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$id.zip"), bytes)
-        }
-    }
-    Streams.dropTasks(spark, dir, "^([0-9]+)\\.zip$")
-      .mapPartitions { ps =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        // raw local FS: each positioned read on the CHECKSUMMED local FS
-        // re-opens and seeks the .crc twin — a local-test artifact (HDFS/
-        // object stores serve positioned reads natively) that dominated
-        // this fixture's cost; production paths go through docsFromPaths,
-        // which uses the path's own filesystem
-        val raw = org.apache.hadoop.fs.FileSystem.getLocal(conf).getRaw
-        ps.flatMap { case (id, p) =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          entriesFromFile(raw, path).zipWithIndex
-            .map { case ((name, payload), i) =>
-              var sum = 0L
-              payload.foreach(b => sum += (b & 0xff))
-              (id, i, name, payload.length, sum)
-            }
-        }
-      }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
+    Streams.land(payloads.as[(Long, Array[Byte])]
+      .map { case (id, bytes) => (s"$id.zip", bytes) }, dir)
+    Streams.walkDrops(spark, dir, "^([0-9]+)\\.zip$") { (id, fs, path) =>
+      // raw local FS: each positioned read on the CHECKSUMMED local FS
+      // re-opens and seeks the .crc twin — a local-test artifact (HDFS/
+      // object stores serve positioned reads natively) that dominated
+      // this fixture's cost; production paths go through docsFromPaths,
+      // which uses the path's own filesystem
+      val raw = fs match {
+        case local: org.apache.hadoop.fs.LocalFileSystem => local.getRaw
+        case other => other
+      }
+      entriesFromFile(raw, path).zipWithIndex.map { case ((name, payload), i) =>
+        var sum = 0L
+        payload.foreach(b => sum += (b & 0xff))
+        (id, i, name, payload.length, sum)
+      }
+    }.toDF("doc_id", "entry_no", "name", "size_bytes", "payload_sum")
       .select(col("doc_id"), col("entry_no").cast("int"), col("name"),
         col("size_bytes").cast("int"), col("payload_sum"))
       .orderBy("doc_id", "entry_no")
   }
 
   private val zipIngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes

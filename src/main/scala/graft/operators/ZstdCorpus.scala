@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.byte
 
 /** Zstandard corpus ingestion — `.zst` is the compression modern text
   * corpora actually ship with (Common Crawl moved its WET/WAT drops to
@@ -69,7 +70,6 @@ object ZstdCorpus extends QueryModule {
   }
 
   private val zstdIngestSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $NeedBytes

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.hexOf
 
 /** EXIF / TIFF-IFD metadata extraction — the camera-metadata walk every
   * image-bearing training pipeline runs before filtering or dedup
@@ -206,9 +207,6 @@ object Exif extends QueryModule {
   private val MakeOfs = 92
   private val ModelOfs = 104
   private val DtOfs = 116
-
-  private def hexOf(s: String): String =
-    s.getBytes("US-ASCII").map("%02X".format(_)).mkString
 
   /** One 12-byte IFD entry as hex; `valueHex` is the 8-hex-char value
     * field already in the right endianness.

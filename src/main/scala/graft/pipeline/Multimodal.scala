@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.FixtureHex.byte
 
 /** Multimodal-column surface for a training-data pipeline: media as OPAQUE
   * `binary` payloads plus a TYPED metadata struct, with decode /
@@ -556,7 +557,6 @@ object Multimodal extends QueryModule {
 
   private val realAudio16Sql = {
     val bandFrames = Wav16Frames / FeatureDim // 12 stereo frames per band
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // little-endian signed 16-bit at byte offset `off`
     def s16(off: String) = {
       val v = s"(${byte(off)} + 256 * ${byte(s"($off) + 1")})"
@@ -634,7 +634,6 @@ object Multimodal extends QueryModule {
 
   private val realAudioDeepSql = {
     val bandFrames = WavDeepFrames / FeatureDim // 12 samples per band
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // 24-bit little-endian signed at sample index i
     val v24 = s"(${byte("3 * i")} + 256 * ${byte("3 * i + 1")} + 65536 * ${byte("3 * i + 2")})"
     val s24 = s"(CASE WHEN $v24 >= 8388608 THEN $v24 - 16777216 ELSE $v24 END)"
@@ -791,7 +790,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realChromaSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // C444 frame 0: U plane at doc bytes 16..31, V at 32..47, pixel-indexed.
     // C420 frame 0: U at 16..19, V at 20..23, quarter-plane index
     // (py>>1)*2 + (px>>1) for pixel p = py*4 + px — nearest upsampling.
@@ -890,7 +888,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realPngSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $PpmPixelBytes
@@ -936,7 +933,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realPng16Sql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // pixel j = bytes (2j, 2j+1) MSB-first; v8 = v16 // 257 exactly
     val px = s"((${byte("2 * i")} * 256 + ${byte("2 * i + 1")}) // 257)"
     s"""WITH d AS (
@@ -1006,7 +1002,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realPngAdam7Sql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= $PpmPixelBytes
@@ -1048,7 +1043,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realPbmSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     s"""WITH d AS (
           SELECT doc_id, hex(encode(text)) AS h
           FROM documents WHERE octet_length(encode(text)) >= 16
@@ -1112,9 +1106,8 @@ object Multimodal extends QueryModule {
   private val realAdpcmSql = {
     // the decoder's floor band bounds for 65 samples over 8 bands
     val bounds = (0 until 8).map(k => ((k * 65) / 8, ((k + 1) * 65) / 8))
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS BIGINT)"
-    val pred0 = s"(CASE WHEN ${byte("33")} >= 128 THEN ${byte("32")} + 256 * ${byte("33")} - 65536 ELSE ${byte("32")} + 256 * ${byte("33")} END)"
-    val idx0 = s"(${byte("34")} % 89)"
+    val pred0 = s"(CASE WHEN ${byte("33", "BIGINT")} >= 128 THEN ${byte("32", "BIGINT")} + 256 * ${byte("33", "BIGINT")} - 65536 ELSE ${byte("32", "BIGINT")} + 256 * ${byte("33", "BIGINT")} END)"
+    val idx0 = s"(${byte("34", "BIGINT")} % 89)"
     val stepTable = "list_value(7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,31,34,37,41,45,50,55,60,66,73,80,88,97,107,118,130,143,157,173,190,209,230,253,279,307,337,371,408,449,494,544,598,658,724,796,876,963,1060,1166,1282,1411,1552,1707,1878,2066,2272,2499,2749,3024,3327,3660,4026,4428,4871,5358,5894,6484,7132,7845,8630,9493,10442,11487,12635,13899,15289,16818,18500,20350,22385,24623,27086,29794,32767)"
     val idxAdj = "list_value(-1,-1,-1,-1,2,4,6,8)"
     val step = s"list_extract($stepTable, CAST(acc[2] AS INT) + 1)"
@@ -1138,7 +1131,7 @@ object Multimodal extends QueryModule {
         ), nb AS (
           SELECT doc_id, h,
                  flatten(list_transform(range(0, 32),
-                   j -> [${byte("j")} % 16, ${byte("j")} // 16])) AS nibs
+                   j -> [${byte("j", "BIGINT")} % 16, ${byte("j", "BIGINT")} // 16])) AS nibs
           FROM d
         ), s AS (
           SELECT doc_id, ($fold)[3:] AS samples FROM nb
@@ -1187,7 +1180,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realG711Sql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // mu-law expand: complement, biased mantissa shifted by segment
     val u = s"(255 - ${byte("i")})"
     val ulaw = s"(CASE WHEN $u >= 128 THEN 132 - ((($u % 16) * 8 + 132) * (1 << (($u // 16) % 8)))" +
@@ -1244,7 +1236,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realBmpRleSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     def nibble(off: String) = s"CAST('0x0' || substring(h, ($off) * 2 + 2, 1) AS INT)"
     // same image as mm_real_bmp's odd arm: decoded row r = (j//3)//6,
     // col = (j//3)%6, palette channel at 4*idx + (2-c)
@@ -1599,7 +1590,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realBmpSql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     def nibble(off: String) = s"CAST('0x0' || substring(h, ($off) * 2 + 2, 1) AS INT)"
     // even: rgb byte j -> pixel p = j//3, channel c = j%3, source 4p + (2-c)
     val even = byte("(j // 3) * 4 + 2 - j % 3")
@@ -1664,7 +1654,6 @@ object Multimodal extends QueryModule {
   }
 
   private val realChroma422Sql = {
-    def byte(off: String) = s"CAST('0x' || substring(h, ($off) * 2 + 1, 2) AS INT)"
     // pixel p = (py, px) on the 4x4 grid, py = p // 4, px = p % 4.
     // C422: U plane (2 wide x 4 tall) at bytes 16..23, V at 24..31;
     //   sample index py*2 + (px >> 1).
@@ -1845,8 +1834,7 @@ object MediaFiles {
     */
   def readStream(spark: SparkSession, dir: String): Dataset[MediaRow] =
     toRows(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+      .schema(graft.operators.Streams.BinaryFileSchema).load(dir))
 }
 
 /** Fake-decoded feature row. */

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSpec
 
-/** The shared distributed landing-bucket lister behind all four path-walk
+/** The shared distributed landing-bucket lister behind all five path-walk
   * front doors: driver-side work is one root `listStatus`, subdirectory
   * walks run inside tasks, parallelism scales with the cluster (4×
   * defaultParallelism — 128 on the driver's local[32]) instead of the old
@@ -132,6 +132,7 @@ class ListDropsSpec extends SparkSpec {
     intercept[Exception](Tar.docsFromPaths(spark, tiny("1.tar.gz")).collect())
     intercept[Exception](Warc.docsFromPaths(spark, tiny("1.warc.gz")).collect())
     intercept[Exception](Zip.docsFromPaths(spark, tiny("1.zip")).collect())
+    intercept[Exception](Pdf.docsFromPaths(spark, tiny("1.pdf")).collect())
     // and the 1-byte case, under every magic's width
     def one(name: String): String = {
       val dir = Files.createTempDirectory("graft_tiny1")
@@ -142,5 +143,27 @@ class ListDropsSpec extends SparkSpec {
     intercept[Exception](Tar.docsFromPaths(spark, one("2.tar")).collect())
     intercept[Exception](Warc.docsFromPaths(spark, one("2.warc")).collect())
     intercept[Exception](Zip.docsFromPaths(spark, one("2.zip")).collect())
+    intercept[Exception](Pdf.docsFromPaths(spark, one("2.pdf")).collect())
+  }
+
+  test("file-id slot space: a 2^39 file id rejects before the walk, every format and door") {
+    // the bytes are no valid container of any format, so only a guard that
+    // runs BEFORE the record walk can name the slot space
+    val formats = Seq[(Container[_], String)](Warc -> "warc", Tar -> "tar",
+      Zip -> "zip", Pdf -> "pdf", Jsonl -> "jsonl")
+    for ((c, ext) <- formats) {
+      val dir = Files.createTempDirectory("graft_slot39")
+      mk(dir, s"${1L << 39}.$ext", "not a container".getBytes("UTF-8"))
+      val doors = Seq[(String, () => Unit)](
+        "docsFromFiles" -> (() => c.docsFromFiles(
+          spark.read.format("binaryFile").load(dir.toString)).collect()),
+        "docsFromPaths" -> (() => c.docsFromPaths(spark, dir.toString).collect()))
+      for ((door, run) <- doors) {
+        val e = intercept[Exception](run())
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString("\n")
+        assert(msgs.contains("2^39"), s"$ext $door: $msgs")
+      }
+    }
   }
 }

@@ -174,4 +174,17 @@ class TarSpec extends AnyFunSuite {
     // n_chars counts codepoints: the emoji is ONE char, not a surrogate pair
     assert(docs(1).getLong(4) == "zweites dokument ".length + 1)
   }
+
+  test("a .tar.lz4 drop ingests identically through docsFromFiles and docsFromPaths") {
+    val spark = graft.SparkSpec.session
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_tar_lz4")
+    Files.write(Paths.get(dir.toString, "9.tar.lz4"), graft.functions.Lz4Deflate.deflate(
+      ustar(Seq(("skip.bin", b, '0'), ("lz.txt", "an lz4 tar member".getBytes("UTF-8"), '0')))))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val byPath = rows(Tar.docsFromPaths(spark, dir.toString))
+    val byBytes = rows(Tar.docsFromFiles(spark.read.format("binaryFile").load(dir.toString)))
+    assert(byPath == Set(Seq((9L << 24) | 1, "an lz4 tar member", "und", "lz.txt", 17L)))
+    assert(byBytes == byPath)
+  }
 }
