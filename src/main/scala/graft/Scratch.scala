@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.DataFrame
 
@@ -20,7 +21,7 @@ object Scratch {
 
   // scratch dirs created by this JVM, removed on exit so repeated Verify /
   // Bench / test runs don't accumulate under the shared root
-  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val created = new ConcurrentLinkedQueue[java.nio.file.Path]()
   sys.addShutdownHook {
     created.forEach(deleteRecursively)
   }
@@ -39,17 +40,14 @@ object Scratch {
     */
   def delete(path: String): Unit = deleteRecursively(Paths.get(path))
 
-  /** Default bucket count for persisted bucketed tables: the
-    * `SPARK_GRAFT_BUCKETS` env var when set, else the session's shuffle
-    * parallelism (`spark.sql.shuffle.partitions`) with 16 as the floor
-    * (the band-index convention) — bucketed layouts track the cluster's
-    * configured parallelism instead of a compile-time constant, with the
-    * env as the explicit operator override.
+  /** Default bucket count for persisted bucketed tables: the session's
+    * shuffle parallelism (`spark.sql.shuffle.partitions`) with 16 as the
+    * floor (the band-index convention) — bucketed layouts track the
+    * cluster's configured parallelism instead of a compile-time constant.
     */
   def defaultBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_BUCKETS").map(_.trim.toInt).getOrElse(
-      math.max(16, scala.util.Try(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(16)))
+    math.max(16, scala.util.Try(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(16))
 
   /** Fresh unique directory under the scratch root. */
   def dir(prefix: String): String = {
@@ -73,23 +71,22 @@ object Scratch {
     * deliberate pass, and both self-join sides read the same immutable files.
     *
     * Dirs written here are PER-INVOCATION (unlike [[memoize]]'s per-run
-    * stages) and are registered for [[sweepEphemeral]]: a harness that runs
-    * many queries back to back (Bench, Verify) sweeps them as soon as the
-    * owning query's action completes, so one query's token-scale scratch
-    * write can never sit on the page cache while its neighbors are being
-    * timed — the r7 text-family regression was exactly that bleed.
+    * stages): each registers under its own unique dir as an `ephemeral`
+    * write for [[sweepEphemeral]], so a harness that runs many queries back
+    * to back (Bench, Verify) sweeps them as soon as the owning query's
+    * action completes, and one query's token-scale scratch write can never
+    * sit on the page cache while its neighbors are being timed — the r7
+    * text-family regression was exactly that bleed.
     */
   def materialize(df: DataFrame, prefix: String): DataFrame = {
     val d = dir(prefix)
     val t0 = System.nanoTime()
     // registered even when the write fails, so the sweep still removes the dir
     try df.write.mode("overwrite").parquet(d)
-    finally ephemeral.add(Span(prefix, "ephemeral", t0, System.nanoTime() - t0, d))
+    finally store.put(d, CompletableFuture.completedFuture(
+      Build(Span(prefix, "ephemeral", t0, System.nanoTime() - t0, d), None)))
     df.sparkSession.read.parquet(d)
   }
-
-  // per-invocation materialize writes, swept between queries by the harnesses
-  private val ephemeral = new java.util.concurrent.ConcurrentLinkedQueue[Span]()
 
   /** Delete every per-invocation [[materialize]] dir created since the last
     * sweep. Callers (Bench, Verify) invoke this AFTER the query's action has
@@ -98,15 +95,12 @@ object Scratch {
     * tables are NOT swept: their cross-query reuse is the production DAG
     * shape ([[memoize]]); they fall to [[clearMemo]]/[[dropBucketedTables]].
     */
-  def sweepEphemeral(): Unit = {
-    var s = ephemeral.poll()
-    while (s != null) { delete(s.path); s = ephemeral.poll() }
-  }
+  def sweepEphemeral(): Unit = drop(Set("ephemeral"))(b => delete(b.span.path))
 
   // monotone count of one-time builds (memoized stages + bucketed index
-  // tables) actually COMPUTED by this JVM — memo hits don't advance it.
-  // Bench samples the delta around each query to tell "paid an index/memo
-  // build" invocations from steady-state ones.
+  // tables) actually COMPUTED by this JVM — memo hits and materialize
+  // writes don't advance it. Bench samples the delta around each query to
+  // tell "paid an index/memo build" invocations from steady-state ones.
   private val builds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Number of one-time builds (memo stages + bucketed tables) computed so
@@ -118,9 +112,9 @@ object Scratch {
     * kind (`memo`, `partitioned`, `bucketed` or `ephemeral`), when it
     * started and how long the build + write took (a stage that forces
     * another memo inside its thunk includes that build), and the path the
-    * files landed under. A span lives exactly as long as its files: each
-    * is stored in the structure that owns the write, so [[clearMemo]],
-    * [[dropBucketedTables]] and [[sweepEphemeral]] drop it with them.
+    * files landed under. A span lives exactly as long as its files:
+    * [[clearMemo]], [[dropBucketedTables]] and [[sweepEphemeral]] drop it
+    * with them.
     */
   final case class Span(name: String, kind: String, startNs: Long, wallNs: Long, path: String) {
     /** Bytes currently under [[path]] (0 once its files are deleted). */
@@ -132,26 +126,64 @@ object Scratch {
       } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => 0L }
   }
 
+  // a finished scratch write: its span and, for a bucketed write, the
+  // catalog table it registered
+  private final case class Build(span: Span, table: Option[String])
+
+  // every live scratch write, one entry per key: memo, partitioned and
+  // bucketed builds under their logical-stage key, materialize writes under
+  // their unique dir. A per-key future rather than a global lock, so
+  // concurrent callers computing DIFFERENT stages never serialize behind
+  // each other's Spark jobs. Only the write's span and table name are kept
+  // — never its frame, which would pin driver-built LocalRelations.
+  private val store = new ConcurrentHashMap[String, CompletableFuture[Build]]()
+
   /** Every live span in this JVM — memo stages and bucketed tables not yet
     * cleared, [[materialize]] writes not yet swept — in start order.
     */
   def spans: Seq[Span] = {
     val out = Seq.newBuilder[Span]
-    memo.values.forEach(f => completed(f).foreach(out += _))
-    bucketMemo.values.forEach(f => completed(f).foreach(out += _.span))
-    ephemeral.forEach(out += _)
+    store.values.forEach(f => completed(f).foreach(out += _.span))
     out.result().sortBy(_.startNs)
   }
 
-  private def completed[T](f: java.util.concurrent.CompletableFuture[T]): Option[T] =
+  private def completed(f: CompletableFuture[Build]): Option[Build] =
     if (f.isDone && !f.isCompletedExceptionally) Some(f.join()) else None
 
-  // content key → future span of its scratch parquet write, one entry per
-  // logical pipeline stage per JVM (see memoize); a per-key future rather
-  // than a global lock so concurrent callers computing DIFFERENT stages
-  // never serialize behind each other's Spark jobs
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Span]]()
+  // release and forget every finished write of the given kinds
+  private def drop(kinds: Set[String])(release: Build => Unit): Unit =
+    store.forEach((key, f) => completed(f).filter(b => kinds(b.span.kind)).foreach { b =>
+      release(b)
+      store.remove(key, f)
+    })
+
+  /** The one build path: exactly-once compute per key via a per-key future.
+    * The first caller installs and completes it, racers (and nested stages
+    * on other keys) proceed independently and wait on it; a failed compute
+    * removes its entry so a retry is possible. `write` gets a fresh scratch
+    * dir and returns the catalog table it registered, if any.
+    */
+  private def build(key: String, kind: String, prefix: String)
+                   (write: String => Option[String]): Build = {
+    val fresh = new CompletableFuture[Build]()
+    val prior = store.putIfAbsent(key, fresh)
+    if (prior != null) prior.join()
+    else
+      try {
+        val d = dir(prefix)
+        val t0 = System.nanoTime()
+        val table = write(d)
+        builds.incrementAndGet()
+        val b = Build(Span(key, kind, t0, System.nanoTime() - t0, d), table)
+        fresh.complete(b)
+        b
+      } catch {
+        case e: Throwable =>
+          store.remove(key, fresh)
+          fresh.completeExceptionally(e)
+          throw e
+      }
+  }
 
   /** [[materialize]], memoized on a logical-stage key: the first call per JVM
     * computes `df` and writes it to scratch parquet; every later call with
@@ -168,11 +200,6 @@ object Scratch {
     * [[Span]]. Callers whose output must be fresh per invocation (e.g. the
     * per-round connected-components label tables) use [[materialize]]
     * directly.
-    *
-    * Exactly-once compute per key via a per-key future: the first caller
-    * installs and completes it, racers (and nested stages on other keys)
-    * proceed independently; a failed compute removes its entry so a retry
-    * is possible.
     */
   def memoize(spark: org.apache.spark.sql.SparkSession, key: String)
              (df: => DataFrame): DataFrame =
@@ -192,28 +219,59 @@ object Scratch {
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(_))
 
   private def memoizeWith(spark: org.apache.spark.sql.SparkSession, key: String, kind: String)
-                         (write: String => Unit): DataFrame = {
-    val fresh = new java.util.concurrent.CompletableFuture[Span]()
-    val prior = memo.putIfAbsent(key, fresh)
-    val fut =
-      if (prior != null) prior
-      else {
-        try {
-          val d = dir("graft_memo")
-          val t0 = System.nanoTime()
-          write(d)
-          builds.incrementAndGet()
-          fresh.complete(Span(key, kind, t0, System.nanoTime() - t0, d))
-        } catch {
-          case e: Throwable =>
-            memo.remove(key, fresh)
-            fresh.completeExceptionally(e)
-            throw e
-        }
-        fresh
-      }
-    spark.read.parquet(fut.join().path)
+                         (write: String => Unit): DataFrame =
+    spark.read.parquet(build(key, kind, "graft_memo") { d => write(d); None }.span.path)
+
+  /** Persist `df` once per (JVM, key) as a catalog table BUCKETED AND
+    * SORTED by `bucketCols` (files under scratch), and hand back a scan of
+    * it. This is the offline index-build lifecycle shared by the dedup
+    * band index, the PageRank edge table, and the CDC state table: build
+    * once, then every iterated/nightly join against the table reads
+    * co-located buckets with ZERO exchange on the persisted side.
+    *
+    * The pre-write `repartition(buckets, bucketCols)` matters: Spark's
+    * native bucket id is `pmod(murmur3(cols), buckets)` — identical to the
+    * repartition hash — so each write task holds exactly one bucket's rows
+    * and the table lands as one file per bucket (not tasks × buckets),
+    * which is also what lets sorted-bucket scans feed sort-merge joins
+    * without re-sorting.
+    */
+  def memoizeBucketed(spark: org.apache.spark.sql.SparkSession, key: String,
+                      prefix: String, bucketCols: Seq[String])
+                     (df: => DataFrame): DataFrame = {
+    val b = build(key, "bucketed", prefix) { path =>
+      val t = s"${prefix}_${java.lang.Long.toHexString(System.nanoTime())}"
+      val buckets = defaultBuckets(spark)
+      df.repartition(buckets,
+          bucketCols.map(org.apache.spark.sql.functions.col): _*)
+        .write.mode("overwrite")
+        .option("path", path)
+        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+        .sortBy(bucketCols.head, bucketCols.tail: _*)
+        .saveAsTable(t)
+      Some(t)
+    }
+    spark.table(b.table.get)
   }
+
+  /** Drop every bucketed table this JVM registered AND delete its files
+    * eagerly (the catalog drop alone leaves the external `path` files until
+    * JVM exit, which would accumulate a copy per Bench pass). Bench pairs
+    * this with [[clearMemo]] between passes so pass 2 re-measures the full
+    * index-build + probe cost.
+    */
+  def dropBucketedTables(spark: org.apache.spark.sql.SparkSession): Unit =
+    drop(Set("bucketed")) { b =>
+      b.table.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      delete(b.span.path)
+    }
+
+  /** Forget every memoized stage (plain and partitioned) and delete its
+    * files eagerly (bounding peak scratch disk instead of waiting for JVM
+    * exit). Bench calls this between suite passes so the second pass
+    * re-measures the real pipelines cold rather than timing warm memo scans.
+    */
+  def clearMemo(): Unit = drop(Set("memo", "partitioned"))(b => delete(b.span.path))
 
   /** Fan a narrow frame out to the session's parallelism BEFORE expensive
     * per-row map work — ONLY when its current plan would run on fewer
@@ -249,7 +307,7 @@ object Scratch {
   def buildConcurrently(thunks: Seq[() => Any]): Unit =
     if (thunks.sizeIs <= 1) thunks.foreach(_.apply())
     else {
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val errs = new ConcurrentLinkedQueue[Throwable]()
       val ts = thunks.map { t =>
         val th = new Thread(() => try { t(); () } catch { case e: Throwable => errs.add(e) })
         th.start(); th
@@ -264,84 +322,4 @@ object Scratch {
         throw first
       }
     }
-
-  private final case class BucketTable(name: String, span: Span)
-
-  // logical-stage key → future (catalog name, write span) of a persisted
-  // bucketed table — same per-key-future discipline as [[memoize]] so a
-  // multi-job index build for one corpus never serializes a concurrent
-  // build for another
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[BucketTable]]()
-
-  /** Persist `df` once per (JVM, key) as a catalog table BUCKETED AND
-    * SORTED by `bucketCols` (files under scratch), and hand back a scan of
-    * it. This is the offline index-build lifecycle shared by the dedup
-    * band index, the PageRank edge table, and the CDC state table: build
-    * once, then every iterated/nightly join against the table reads
-    * co-located buckets with ZERO exchange on the persisted side.
-    *
-    * The pre-write `repartition(buckets, bucketCols)` matters: Spark's
-    * native bucket id is `pmod(murmur3(cols), buckets)` — identical to the
-    * repartition hash — so each write task holds exactly one bucket's rows
-    * and the table lands as one file per bucket (not tasks × buckets),
-    * which is also what lets sorted-bucket scans feed sort-merge joins
-    * without re-sorting.
-    */
-  def memoizeBucketed(spark: org.apache.spark.sql.SparkSession, key: String,
-                      prefix: String, bucketCols: Seq[String])
-                     (df: => DataFrame): DataFrame = {
-    val fresh = new java.util.concurrent.CompletableFuture[BucketTable]()
-    val prior = bucketMemo.putIfAbsent(key, fresh)
-    val fut =
-      if (prior != null) prior
-      else {
-        try {
-          val t = s"${prefix}_${java.lang.Long.toHexString(System.nanoTime())}"
-          val path = dir(prefix)
-          val buckets = defaultBuckets(spark)
-          val t0 = System.nanoTime()
-          df.repartition(buckets,
-              bucketCols.map(org.apache.spark.sql.functions.col): _*)
-            .write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-            .sortBy(bucketCols.head, bucketCols.tail: _*)
-            .saveAsTable(t)
-          builds.incrementAndGet()
-          fresh.complete(BucketTable(t, Span(key, "bucketed", t0, System.nanoTime() - t0, path)))
-        } catch {
-          case e: Throwable =>
-            bucketMemo.remove(key, fresh)
-            fresh.completeExceptionally(e)
-            throw e
-        }
-        fresh
-      }
-    spark.table(fut.join().name)
-  }
-
-  /** Drop every bucketed table this JVM registered AND delete its files
-    * eagerly (the catalog drop alone leaves the external `path` files until
-    * JVM exit, which would accumulate a copy per Bench pass). Bench pairs
-    * this with [[clearMemo]] between passes so pass 2 re-measures the full
-    * index-build + probe cost.
-    */
-  def dropBucketedTables(spark: org.apache.spark.sql.SparkSession): Unit = {
-    bucketMemo.values.forEach(f => completed(f).foreach { bt =>
-      spark.sql(s"DROP TABLE IF EXISTS ${bt.name}")
-      delete(bt.span.path)
-    })
-    bucketMemo.clear()
-  }
-
-  /** Forget every memoized stage and delete its files eagerly (bounding peak
-    * scratch disk instead of waiting for JVM exit). Bench calls this between
-    * suite passes so the second pass re-measures the real pipelines cold
-    * rather than timing warm memo scans.
-    */
-  def clearMemo(): Unit = {
-    memo.values.forEach(f => completed(f).foreach(s => delete(s.path)))
-    memo.clear()
-  }
 }

@@ -54,15 +54,8 @@ object FuzzyJoin extends QueryModule {
     */
   def fuzzyPairs(spark: SparkSession, sfDir: String): DataFrame =
     graft.Scratch.memoize(spark, s"$sfDir#fuzzy#pairs") {
-      fuzzyPairsBuild(spark, sfDir)
+      rawPairs(spark, sfDir).select("a_id", "b_id").distinct()
     }
-
-  /** The unmemoized d=1 pair-build frame — package-visible so the BUILD
-    * plan (what the memoizing query actually pays) can be explained; the
-    * registered consumers' own plans scan the memo.
-    */
-  private[graft] def fuzzyPairsBuild(spark: SparkSession, sfDir: String): DataFrame =
-    rawPairs(spark, sfDir).select("a_id", "b_id").distinct()
 
   private def rawPairs(spark: SparkSession, sfDir: String): DataFrame = {
     // explode + codegen'd substring/concat, NOT a transform() lambda

@@ -70,45 +70,29 @@ object Graph extends QueryModule {
     */
   private def edges(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.memoizeBucketed(spark, s"$sfDir#graph#adj", "graft_edges", Seq("u")) {
-      edgesBuild(spark, sfDir)
+      // per-order ordered pairs from the shared basket arrays (r19: the
+      // items self-join re-shuffled both sides on l_orderkey; the array memo
+      // pays that grouping once for basket AND graph), both directions
+      val c = Retail.orderPairs(spark, sfDir)
+      val dir = c.select(col("part_a").as("u"), col("part_b").as("v"))
+        .unionByName(c.select(col("part_b").as("u"), col("part_a").as("v")))
+      // the u-only repartition makes the distinct's exchange land on
+      // hashpartitioning(u) (a u-partitioning trivially clusters (u, v)), so
+      // the adjacency groupBy below reuses it instead of adding a second
+      // shuffle (guide §2.4: two operations keyed the same way share one
+      // exchange) — the same reuse the r18 deg window exploited
+      val e = dir.repartition(col("u")).distinct()
+      // vs sorted for a deterministic persisted layout; deg = size(vs) is
+      // exactly the retired window's COUNT(*) OVER (PARTITION BY u)
+      e.groupBy("u").agg(sort_array(collect_list(col("v"))).as("vs"))
+        .select(col("u"), size(col("vs")).cast("long").as("deg"), col("vs"))
     }
-
-  /** The unmemoized adjacency-build frame — package-visible so the plan
-    * audit can explain the BUILD (the registered query's own plan scans
-    * the bucketed memo). The build is the one-time offline index job; its
-    * plan shape is what matters at 100 TB.
-    */
-  private[graft] def edgesBuild(spark: SparkSession, sfDir: String): DataFrame = {
-    // per-order ordered pairs from the shared basket arrays (r19: the
-    // items self-join re-shuffled both sides on l_orderkey; the array memo
-    // pays that grouping once for basket AND graph), both directions
-    val c = Retail.orderPairs(spark, sfDir)
-    val dir = c.select(col("part_a").as("u"), col("part_b").as("v"))
-      .unionByName(c.select(col("part_b").as("u"), col("part_a").as("v")))
-    // the u-only repartition makes the distinct's exchange land on
-    // hashpartitioning(u) (a u-partitioning trivially clusters (u, v)), so
-    // the adjacency groupBy below reuses it instead of adding a second
-    // shuffle (guide §2.4: two operations keyed the same way share one
-    // exchange) — the same reuse the r18 deg window exploited
-    val e = dir.repartition(col("u")).distinct()
-    // vs sorted for a deterministic persisted layout; deg = size(vs) is
-    // exactly the retired window's COUNT(*) OVER (PARTITION BY u)
-    e.groupBy("u").agg(sort_array(collect_list(col("v"))).as("vs"))
-      .select(col("u"), size(col("vs")).cast("long").as("deg"), col("vs"))
-  }
 
   /** [[Iterations]] rounds of PageRank over a `(u, deg, vs)` adjacency
     * table (vs = out-neighbors of u, deg = size(vs)). Returns
     * `(id, deg, pagerank)` for every node with at least one out-edge.
     */
-  def pagerankOf(adj: DataFrame): DataFrame =
-    pagerankOfWithAgg(adj, "sorted_sum(c)")
-
-  /** [[pagerankOf]] with the contribution aggregate pluggable — bench/A-B
-    * surface for comparing deterministic-sum implementations (the HOF fold
-    * and `sorted_sum` are bit-identical; see SortedSumSpec).
-    */
-  private[graft] def pagerankOfWithAgg(adj: DataFrame, aggExpr: String): DataFrame = {
+  def pagerankOf(adj: DataFrame): DataFrame = {
     // one row per u by construction — no distinct; parquet prunes `vs`
     val nodes = adj.select(col("u").as("id"), col("deg"))
     val n = nodes.agg(count(lit(1)).as("n")).scalar()
@@ -121,7 +105,7 @@ object Graph extends QueryModule {
         .join(ranks, adj("u") === ranks("id"))
         .select(explode(col("vs")).as("id"), (col("r") / col("deg")).as("c"))
         .groupBy("id")
-        .agg(expr(aggExpr).as("s"))
+        .agg(expr("sorted_sum(c)").as("s"))
       ranks = nodes.join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit(Teleport) / n +
@@ -134,11 +118,7 @@ object Graph extends QueryModule {
     * PageRank, ties broken by part id.
     */
   def pagerankQ(spark: SparkSession, sfDir: String): DataFrame =
-    pagerankQWithAgg(spark, sfDir, "sorted_sum(c)")
-
-  private[graft] def pagerankQWithAgg(spark: SparkSession, sfDir: String,
-      aggExpr: String): DataFrame =
-    pagerankOfWithAgg(edges(spark, sfDir), aggExpr)
+    pagerankOf(edges(spark, sfDir))
       .select(col("id").as("part_id"), col("deg").as("n_neighbors"), col("pagerank"))
       .orderBy(col("pagerank").desc, col("part_id"))
       .limit(TopK)

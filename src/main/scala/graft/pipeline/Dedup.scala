@@ -187,7 +187,6 @@ object Dedup extends QueryModule {
     s"""list_transform(range(0, $NumPerms), k ->
           list_min(list_transform($hashes, h ->
             ((37 * k + 11) * (h % $M) + 101 * k + 7) % $M)))"""
-  val minhashSigDuck: String = minhashSigDuckOf(tokenHashesDuck)
 
   /** SimHash: per bit j, majority vote of token-hash bits (+1/-1). Spark side
     * uses the equivalent formulation `2 * ones(j) > tokens` over exploded
@@ -1454,9 +1453,8 @@ object Dedup extends QueryModule {
     }
 
   /** The documented escape hatch for the exact path's measured quadratic
-    * tail: with `graft.dedup.prefix.maxDf` (conf) or
-    * `SPARK_GRAFT_PREFIX_MAXDF` (env, the probe convention) set to a
-    * positive N, prefix tokens whose PREFIX posting exceeds N — exactly
+    * tail: with the `graft.dedup.prefix.maxDf` conf set to a positive
+    * N, prefix tokens whose PREFIX posting exceeds N — exactly
     * the df² head that drives the superlinear growth — leave the
     * pairwise candidate join, and the banded-LSH candidate path covers
     * their pairs instead, through the SAME exact-Jaccard verify. Recall
@@ -1468,7 +1466,6 @@ object Dedup extends QueryModule {
     */
   private def prefixMaxDf(spark: SparkSession): Long =
     spark.conf.getOption("graft.dedup.prefix.maxDf")
-      .orElse(sys.env.get("SPARK_GRAFT_PREFIX_MAXDF"))
       .map(_.toLong).getOrElse(0L) // <= 0: cap off
 
   /** The un-memoized ground-truth build — exposed so PlanAssertionsSpec can

@@ -91,11 +91,6 @@ object Similarity {
       s"CASE WHEN vec_dot($v, ${planeSpark(p)}) > 0 THEN ${1 << p} ELSE 0 END"
     }.mkString("(", " + ", ")")
 
-  def ivfAssignDuck(v: String): String =
-    (0 until NumPlanes).map { p =>
-      s"CASE WHEN ${dotDuck(v, planeDuck(p))} > 0 THEN ${1 << p} ELSE 0 END"
-    }.mkString("(", " + ", ")")
-
   // ---- IVF coarse quantizer (argmin-centroid assignment) ----
 
   /** Number of IVF centroids (Voronoi cells) and probes per query. TUNED ON

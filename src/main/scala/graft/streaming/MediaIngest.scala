@@ -30,14 +30,10 @@ import graft.pipeline.{BatchedDecode, MediaRow}
 object MediaIngest {
 
   /** Bucket fan-out of the persisted band index (`bkt=` partition
-    * dirs). MUST stay constant over a stream's lifetime — the landed
-    * layout is keyed by it — so it is an env knob
-    * (`SPARK_GRAFT_MEDIA_BAND_BUCKETS`), not a session conf: size it
-    * to the CORPUS (more buckets = finer probe pruning, more files per
-    * batch) when provisioning the stream, then leave it alone.
+    * dirs). A constant, never a session conf: the landed layout is keyed
+    * by it, so it MUST stay fixed over a stream's lifetime.
     */
-  val BandBuckets: Int =
-    sys.env.get("SPARK_GRAFT_MEDIA_BAND_BUCKETS").map(_.trim.toInt).getOrElse(16)
+  val BandBuckets = 16
 
   /** The persisted band-index row layout: band rows under
     * `bands/batch_id=N/bkt=K/`. Explicit so the probe can scan the

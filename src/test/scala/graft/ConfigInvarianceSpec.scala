@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan-shape changes inside Spark itself — partition counts, exchange
   * placement, adaptive re-planning — must be invisible in the results.
   *
-  * All 186 registered queries run under both configs at sf0.001 (r8 #5 /
+  * Every registered query runs under both configs at sf0.001 (r8 #5 /
   * r10 #4 directive: partition-order nondeterminism is the one bug class
   * the oracle can't see, and it is cheap at this scale). Memoized stages
   * and bucketed index tables are cleared between configs so the shared

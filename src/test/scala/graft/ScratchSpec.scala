@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Contract tests for the scratch memo layer: exactly-once compute per key
@@ -10,35 +11,50 @@ import org.apache.spark.sql.functions._
   */
 class ScratchSpec extends SparkSpec {
 
+  /** The three keyed entry points, one build path behind them: each runs
+    * `df` under `key` and hands back its scan. The partitioned one adds the
+    * partition column it lays out by.
+    */
+  private val keyedEntries: Seq[(String, (String, () => DataFrame) => DataFrame)] = Seq(
+    "memoize" -> ((key, df) => Scratch.memoize(spark, key)(df())),
+    "memoizePartitioned" -> ((key, df) => Scratch.memoizePartitioned(spark, key, Seq("p"))(
+      df().withColumn("p", col("id") % 2))),
+    "memoizeBucketed" -> ((key, df) => Scratch.memoizeBucketed(spark, key, "graft_spec_once",
+      Seq("id"))(df())))
+
   test("memoize computes a key exactly once under concurrent callers") {
-    val computes = new AtomicInteger(0)
-    val threads = (1 to 8).map { _ =>
-      new Thread(() => {
-        val df = Scratch.memoize(spark, "spec#concurrent-once") {
-          computes.incrementAndGet()
-          spark.range(100).select(col("id"))
-        }
-        assert(df.count() === 100L)
-      })
+    for ((entry, memo) <- keyedEntries) {
+      val computes = new AtomicInteger(0)
+      val threads = (1 to 8).map { _ =>
+        new Thread(() => {
+          val df = memo(s"spec#concurrent-once-$entry", () => {
+            computes.incrementAndGet()
+            spark.range(100).select(col("id"))
+          })
+          assert(df.count() === 100L)
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(computes.get() === 1, entry)
     }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    assert(computes.get() === 1)
   }
 
   test("a failed compute is retryable (entry removed, later caller succeeds)") {
-    val attempts = new AtomicInteger(0)
-    intercept[RuntimeException] {
-      Scratch.memoize(spark, "spec#retry") {
-        attempts.incrementAndGet()
-        throw new RuntimeException("boom")
+    for ((entry, memo) <- keyedEntries) {
+      val attempts = new AtomicInteger(0)
+      intercept[RuntimeException] {
+        memo(s"spec#retry-$entry", () => {
+          attempts.incrementAndGet()
+          throw new RuntimeException("boom")
+        })
       }
+      val df = memo(s"spec#retry-$entry", () => {
+        attempts.incrementAndGet()
+        spark.range(5).select(col("id"))
+      })
+      assert(df.count() === 5L && attempts.get() === 2, entry)
     }
-    val df = Scratch.memoize(spark, "spec#retry") {
-      attempts.incrementAndGet()
-      spark.range(5).select(col("id"))
-    }
-    assert(df.count() === 5L && attempts.get() === 2)
   }
 
   test("different keys never share results; clearMemo forces recompute") {
