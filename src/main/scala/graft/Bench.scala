@@ -232,6 +232,16 @@ object Bench {
   private[graft] def tiebreakComparable(sampleBuilds: Long, expectedBuilds: Long): Boolean =
     sampleBuilds >= expectedBuilds
 
+  /** The queries a tie-break retry of `name` replays first, untimed, after
+    * a full reset: every query ahead of it in the pass order `names` whose
+    * pass-2 run computed one-time builds. Those are the build owners the
+    * retried query's in-pass run found in place, taken from what pass 2
+    * actually built rather than from a hand-kept producer list.
+    */
+  private[graft] def replayBefore(names: Seq[String], name: String,
+      pass2Builds: String => Long): Seq[String] =
+    names.takeWhile(_ != name).filter(n => pass2Builds(n) > 0)
+
   private[graft] def classifyStall(slow: RunMetrics, fast: RunMetrics): String = {
     val excess = slow.wall - fast.wall
     val gcExcess = slow.gc - fast.gc
@@ -266,7 +276,8 @@ object Bench {
     // AFTER their producers (exactly how a production pipeline schedules —
     // pair tables are built by the pair queries, then resolution/recall
     // consume them), so each query's time reflects the work it owns. Ties
-    // and everything else stay sorted.
+    // and everything else stay sorted. The rank only sets the pass order;
+    // the tie-break replay takes its producers from pass 2's builds.
     val producerRank = Map(
       "dedup_minhash_lsh" -> 0, "dedup_simhash" -> 0, "similarity_topk_lsh" -> 0,
       "similarity_topk_ivf" -> 0,
@@ -284,7 +295,7 @@ object Bench {
       "corpus_curated_manifest" -> 1,
       // consumes the shingle-postings memo the exact cosine query builds
       "dedup_cosine_lsh" -> 1,
-      // consumes the IVF cell-assignment memo similarity_topk_ivf builds
+      // consumes the IVF cell-assignment memo (simivf#16) similarity_ivf_sweep builds
       "dedup_semantic" -> 1,
       // consumes the PQ top-k memo similarity_topk_pq builds (alphabetical
       // order would run the recall row first and land the build on it)
@@ -396,9 +407,10 @@ object Bench {
     // divergent queries because the acceptance rule discarded the third
     // with no trace. Every rejection logs to stderr with both build counts
     // and lands in the `rejected_samples` diagnostics, and the query gets
-    // ONE retry in a reconstructed pass-2 environment (fresh reset for
-    // build owners, then the producer-ranked queries of lower rank replayed
-    // untimed so the retry owns exactly the builds its pass-2 run owned).
+    // ONE retry in a reconstructed pass-2 environment (fresh reset, then
+    // every earlier query whose pass-2 run built something replayed untimed
+    // — `replayBefore` — so the retry owns exactly the builds its pass-2 run
+    // owned).
     final case class RejectedSample(name: String, m: RunMetrics,
       expectedBuilds: Long, err: Option[String], attempt: Int)
     val rejected = scala.collection.mutable.Buffer.empty[RejectedSample]
@@ -417,17 +429,18 @@ object Bench {
         None
       }
     }
-    // replay the memo producers a mid-DAG query consumed in-pass (untimed),
-    // so a retried consumer finds its upstream memos in place instead of
-    // rebuilding them — the builds-mismatch cause for DAG consumers
-    def warmProducers(rank: Int): Unit =
-      producerRank.toSeq.filter(_._2 < rank).sortBy { case (n, r) => (r, n) }
-        .foreach { case (n, _) =>
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-          Scratch.sweepEphemeral()
-        }
+    // reset, then replay (untimed) the build owners a query found in place
+    // in pass 2, so a retried consumer does not rebuild its upstream memos
+    // — the builds-mismatch cause for DAG consumers
+    def replayOwners(name: String): Unit = {
+      resetShared()
+      replayBefore(names, name, n => pass2(n)._1.builds).foreach { n =>
+        try SparkEntry.queries(n)(spark, sfDir).count()
+        catch { case _: Throwable => () }
+        spark.catalog.clearCache()
+        Scratch.sweepEphemeral()
+      }
+    }
     def retryable(name: String): Boolean =
       rejected.exists(r => r.name == name && r.err.isEmpty) // errored samples don't retry: the query itself is broken
     val (probeOnly, buildOwning) = needTiebreak.partition(n => pass2(n)._1.builds == 0)
@@ -436,20 +449,21 @@ object Bench {
       // (all memos in place — exactly the in-pass environment)
       val warm = probeOnly.flatMap(n => attemptTiebreak(n, 1))
       // build-owning: fresh reset, DAG order; a rejected sample retries once
-      // with its own reconstructed environment (reset + producers replayed)
+      // with its own reconstructed environment (reset + build owners replayed)
       if (buildOwning.nonEmpty) resetShared()
       val own = buildOwning.flatMap { n =>
         attemptTiebreak(n, 1).orElse {
           if (retryable(n)) {
-            resetShared(); warmProducers(producerRank(n)); attemptTiebreak(n, 2)
+            replayOwners(n); attemptTiebreak(n, 2)
           } else None
         }
       }
-      // probe-only retries run LAST: each reconstructs the all-memos state
-      // from scratch (reset + every listed producer), so the reset cannot
-      // disturb the post-pass-2 state the other probe-only samples used
+      // probe-only retries run LAST: each reconstructs its pass-2 state
+      // from scratch (reset + the build owners ahead of it), so the reset
+      // cannot disturb the post-pass-2 state the other probe-only samples
+      // used
       val probeRetries = probeOnly.filter(retryable).flatMap { n =>
-        resetShared(); warmProducers(Int.MaxValue); attemptTiebreak(n, 2)
+        replayOwners(n); attemptTiebreak(n, 2)
       }
       (warm ++ own ++ probeRetries).toMap
     }

@@ -9,20 +9,12 @@ import graft.plans.{AsOfJoinStrategy, EliminateRedundantLeftJoin, PushLeftFilter
   * extension point, so any Spark deployment (cluster or local) picks the
   * functions up without touching internal session state.
   *
-  * Functions: `vec_dot(array<float|double>, array<float|double>) -> double`
-  * (codegen'd strict-left-fold dot product; see [[functions.VectorDot]]),
-  * `jaccard_sorted(array<bigint>, array<bigint>) -> double` (one-merge-pass
-  * set Jaccard over sorted hash arrays; see [[functions.JaccardSorted]]),
-  * `kmv_distinct(hash bigint) -> double` (bounded-buffer KMV distinct-count
-  * sketch; see [[functions.KmvSketchAgg]]), `kmv_sketch(hash bigint) ->
-  * array<bigint>` (the sketch SET itself, for KMV union/intersection
-  * algebra; see [[functions.KmvSketchSetAgg]]), the bloom pair
-  * `bloom_filter_agg` / `might_contain` (Spark's own runtime-filter
-  * expressions surfaced for deliberate use; see [[functions.BloomAgg]],
-  * [[functions.MightContain]], [[operators.BloomJoin]]), and
-  * `lev_within(string, string, int) -> boolean` (banded bounded edit
-  * distance for the fuzzy-join verify hot path; see
-  * [[functions.LevWithin]]).
+  * Functions: every row of [[functions.Registry]] — the static kernels
+  * ([[functions.Registry.kernels]], one [[functions.Kernel]] expression),
+  * the hand-written loop expressions (`vec_dot`, `jaccard_sorted`,
+  * `lev_within`, `minhash_sig`, `simhash_sig`), the aggregates
+  * (`sorted_sum`, `kmv_distinct`, `kmv_sketch`) and Spark's own bloom pair
+  * (`bloom_filter_agg`, `might_contain`).
   *
   * Plans: the native as-of join ([[plans.AsOfJoinNode]] →
   * [[plans.AsOfMergeExec]] via [[plans.AsOfJoinStrategy]]) plus its one
@@ -34,32 +26,7 @@ import graft.plans.{AsOfJoinStrategy, EliminateRedundantLeftJoin, PushLeftFilter
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(functions.VectorDot.description)
-    ext.injectFunction(functions.JaccardSorted.description)
-    ext.injectFunction(functions.SortedSumAgg.description)
-    ext.injectFunction(functions.KmvSketchAgg.description)
-    ext.injectFunction(functions.KmvSketchSetAgg.description)
-    ext.injectFunction(functions.MightContain.description)
-    ext.injectFunction(functions.BloomAgg.description)
-    ext.injectFunction(functions.LevWithin.description)
-    ext.injectFunction(functions.MinhashSig.description)
-    ext.injectFunction(functions.SimhashSig.description)
-    ext.injectFunction(functions.Adler32Fn.description)
-    ext.injectFunction(functions.Ascii85Armor.description)
-    ext.injectFunction(functions.JpegDcScanHex.description)
-    ext.injectFunction(functions.GifPixelBlocksHex.description)
-    ext.injectFunction(functions.Ahash64Sampled.description)
-    ext.injectFunction(functions.Hash60Array.description)
-    ext.injectFunction(functions.Md5BucketCounts.description)
-    ext.injectFunction(functions.TrigramBucketCounts.description)
-    ext.injectFunction(functions.Gunzip.description)
-    ext.injectFunction(functions.ZstdInflate.description)
-    ext.injectFunction(functions.ZstdDeflate.description)
-    ext.injectFunction(functions.Lz4Inflate.description)
-    ext.injectFunction(functions.Lz4Deflate.description)
-    ext.injectFunction(functions.NfcNormalize.description)
-    ext.injectFunction(functions.ByteStats.entropyDescription)
-    ext.injectFunction(functions.ByteStats.distinctDescription)
+    functions.Registry.all.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => new AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => new PushLeftFilterThroughAsOf)
     ext.injectOptimizerRule(_ => new EliminateRedundantLeftJoin)

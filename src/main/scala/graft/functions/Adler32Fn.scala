@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** `adler32(binary) -> bigint` — the zlib Adler-32 checksum
   * (`s2·65536 + s1`, both mod 65521) via the JDK's
   * [[java.util.zip.Adler32]], surfaced for the SQL fixture emitters.
@@ -17,7 +11,7 @@ import org.apache.spark.sql.types._
   * string with `conv(substring(...))` (~hundreds of interpreted expression
   * evaluations per document, measured as the dominant per-pass cost of
   * `pdf_text_extract` / `pdf_filter_chain_extract` / `mm_real_png*`).
-  * This expression computes the identical value in one codegen'd call.
+  * This kernel computes the identical value in one codegen'd call.
   * Writer/reader independence is preserved and strengthened: the emitted
   * checksum now comes from the JDK's zlib implementation while the decode
   * side's `Inflater` verifies it independently — a wrong checksum still
@@ -25,41 +19,10 @@ import org.apache.spark.sql.types._
   * from the raw bytes either way (EmitterKernelSpec pins value equality
   * against the arithmetic SQL fold).
   */
-case class Adler32Fn(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "adler32"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"adler32 requires binary, got $t")
-  }
-
-  override def nullSafeEval(b: Any): Any =
-    Adler32Fn.checksum(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.Adler32Fn.checksum($b)")
-
-  override protected def withNewChildInternal(newChild: Expression): Adler32Fn =
-    copy(child = newChild)
-}
-
 object Adler32Fn {
-  /** The kernel — public static forwarder target for generated code. */
   def checksum(bytes: Array[Byte]): Long = {
     val a = new java.util.zip.Adler32()
     a.update(bytes, 0, bytes.length)
     a.getValue
   }
-
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("adler32"),
-    new ExpressionInfo(classOf[Adler32Fn].getName, "adler32"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"adler32 expects exactly 1 argument (binary), got ${children.length}")
-      Adler32Fn(children.head)
-    }
-  )
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `ascii85_armor(binary) -> string` — the ISO 32000-1 §7.4.3 base-85
@@ -27,28 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * encoder — EmitterKernelSpec pins byte equality against the mirror and
   * against the retired arithmetic SQL form.
   */
-case class Ascii85Armor(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "ascii85_armor"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"ascii85_armor requires binary, got $t")
-  }
-
-  override def nullSafeEval(b: Any): Any =
-    Ascii85Armor.armor(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.Ascii85Armor.armor($b)")
-
-  override protected def withNewChildInternal(newChild: Expression): Ascii85Armor =
-    copy(child = newChild)
-}
-
 object Ascii85Armor {
-  /** The kernel — public static forwarder target for generated code. */
   def armor(data: Array[Byte]): UTF8String = {
     val n = data.length
     val full = n / 4
@@ -82,14 +56,4 @@ object Ascii85Armor {
     }
     UTF8String.fromBytes(out)
   }
-
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ascii85_armor"),
-    new ExpressionInfo(classOf[Ascii85Armor].getName, "ascii85_armor"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"ascii85_armor expects exactly 1 argument (binary), got ${children.length}")
-      Ascii85Armor(children.head)
-    }
-  )
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-histogram quality signals (cf. the reference's cleaning stage,
@@ -17,7 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * prose sits ~3.5-5 bits/byte; boilerplate / single-char floods fall below
   * ~2.5; compressed-or-random binary pasted into text pushes past ~6.
   *
-  * Why an `Expression`: one O(n) pass per row inside whole-stage codegen —
+  * `byte_distinct_count(string) -> bigint`: number of distinct byte values
+  * in the UTF-8 encoding — the alphabet-width companion signal (a 300-byte
+  * doc written with 6 distinct bytes is a flood regardless of its entropy).
+  *
+  * Why native kernels: one O(n) pass per row inside whole-stage codegen —
   * at 100 TB this must be a map-only scan column, never an explode(byte) +
   * groupBy (that shape shuffles one row PER BYTE). The milli-quantized
   * BIGINT keeps the oracle compare integer-exact; both engines compute the
@@ -25,52 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * are order-sensitive, so the order is part of the contract — the DuckDB
   * twin sums `list(c*ln(c) ORDER BY byte)`).
   */
-case class ByteEntropyMilli(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "byte_entropy_milli"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"byte_entropy_milli requires a string input, got ${child.dataType}")
-
-  override def nullSafeEval(s: Any): Any =
-    ByteStats.entropyMilli(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.ByteStats.entropyMilli($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): ByteEntropyMilli =
-    copy(child = newChild)
-}
-
-/** `byte_distinct_count(string) -> bigint`: number of distinct byte values
-  * in the UTF-8 encoding — the alphabet-width companion signal (a 300-byte
-  * doc written with 6 distinct bytes is a flood regardless of its entropy).
-  */
-case class ByteDistinctCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "byte_distinct_count"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"byte_distinct_count requires a string input, got ${child.dataType}")
-
-  override def nullSafeEval(s: Any): Any =
-    ByteStats.distinctCount(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.ByteStats.distinctCount($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): ByteDistinctCount =
-    copy(child = newChild)
-}
-
 object ByteStats {
   private val Ln2 = math.log(2.0)
 
@@ -117,22 +70,4 @@ object ByteStats {
     }
     counts
   }
-
-  val entropyDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("byte_entropy_milli"),
-    new ExpressionInfo(classOf[ByteEntropyMilli].getName, "byte_entropy_milli"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"byte_entropy_milli expects exactly 1 string argument, got ${children.length}")
-      ByteEntropyMilli(children.head)
-    })
-
-  val distinctDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("byte_distinct_count"),
-    new ExpressionInfo(classOf[ByteDistinctCount].getName, "byte_distinct_count"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"byte_distinct_count expects exactly 1 string argument, got ${children.length}")
-      ByteDistinctCount(children.head)
-    })
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression, UnaryExpression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd kernels for the heavy per-bit/per-byte inner loops of the
@@ -177,112 +172,3 @@ object FixtureEmitters {
   }
 }
 
-/** `jpeg_dc_scan_hex(data binary, rst int, mode int, orient int) -> string`
-  * — see [[FixtureEmitters.jpegDcScanHex]].
-  */
-case class JpegDcScanHex(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "jpeg_dc_scan_hex"
-  override def nullable: Boolean = first.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (BinaryType, IntegerType, IntegerType, IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case ts => TypeCheckResult.TypeCheckFailure(
-        s"jpeg_dc_scan_hex requires (binary, int, int, int), got $ts")
-    }
-
-  override def nullSafeEval(d: Any, r: Any, m: Any, o: Any): Any =
-    FixtureEmitters.jpegDcScanHex(d.asInstanceOf[Array[Byte]],
-      r.asInstanceOf[Int], m.asInstanceOf[Int], o.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (d, r, m, o) =>
-      s"graft.functions.FixtureEmitters.jpegDcScanHex($d, $r, $m, $o)")
-
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): JpegDcScanHex = copy(a, b, c, d)
-}
-
-object JpegDcScanHex {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_dc_scan_hex"),
-    new ExpressionInfo(classOf[JpegDcScanHex].getName, "jpeg_dc_scan_hex"),
-    (children: Seq[Expression]) => {
-      require(children.length == 4,
-        s"jpeg_dc_scan_hex expects 4 arguments (binary, int, int, int), got ${children.length}")
-      JpegDcScanHex(children(0), children(1), children(2), children(3))
-    }
-  )
-}
-
-/** `gif_pixel_blocks_hex(binary) -> string` — see
-  * [[FixtureEmitters.gifPixelBlocksHex]].
-  */
-case class GifPixelBlocksHex(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "gif_pixel_blocks_hex"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"gif_pixel_blocks_hex requires binary, got $t")
-  }
-
-  override def nullSafeEval(b: Any): Any =
-    FixtureEmitters.gifPixelBlocksHex(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.FixtureEmitters.gifPixelBlocksHex($b)")
-
-  override protected def withNewChildInternal(newChild: Expression): GifPixelBlocksHex =
-    copy(child = newChild)
-}
-
-object GifPixelBlocksHex {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gif_pixel_blocks_hex"),
-    new ExpressionInfo(classOf[GifPixelBlocksHex].getName, "gif_pixel_blocks_hex"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"gif_pixel_blocks_hex expects 1 argument (binary), got ${children.length}")
-      GifPixelBlocksHex(children.head)
-    }
-  )
-}
-
-/** `ahash64_sampled(binary) -> bigint` — see
-  * [[FixtureEmitters.ahash64Sampled]].
-  */
-case class Ahash64Sampled(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ahash64_sampled"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"ahash64_sampled requires binary, got $t")
-  }
-
-  override def nullSafeEval(b: Any): Any =
-    FixtureEmitters.ahash64Sampled(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.FixtureEmitters.ahash64Sampled($b)")
-
-  override protected def withNewChildInternal(newChild: Expression): Ahash64Sampled =
-    copy(child = newChild)
-}
-
-object Ahash64Sampled {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ahash64_sampled"),
-    new ExpressionInfo(classOf[Ahash64Sampled].getName, "ahash64_sampled"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"ahash64_sampled expects 1 argument (binary), got ${children.length}")
-      Ahash64Sampled(children.head)
-    }
-  )
-}

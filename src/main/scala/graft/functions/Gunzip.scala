@@ -1,17 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** `gunzip(binary) -> binary`: decompress a gzip payload — ALL members of
   * a multi-member stream, concatenated, which is gzip's own `cat`
   * semantics and the shape compressed text corpora (WET/WARC dumps,
   * `.jsonl.gz` drops) actually arrive in.
   *
-  * Why an `Expression`: decompression belongs INSIDE whole-stage codegen
+  * Why a native kernel: decompression belongs INSIDE whole-stage codegen
   * on the scan→parse hot path (one virtual call per row into a static
   * kernel), not in a `mapPartitions` that breaks the codegen span and
   * forces a Dataset encode/decode around every batch — the same
@@ -22,28 +16,6 @@ import org.apache.spark.sql.types._
   * uncompressed bytes and ISIZE mod 2^32) — a corrupted archive throws
   * with a named error instead of yielding silent garbage.
   */
-case class Gunzip(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "gunzip"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gunzip requires binary input, got ${child.dataType}")
-
-  override def nullSafeEval(bytes: Any): Any =
-    Gunzip.gunzip(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Gunzip.gunzip($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Gunzip =
-    copy(child = newChild)
-}
-
 object Gunzip {
 
   /** One decompressed gzip member plus the offset where the next starts. */
@@ -132,14 +104,4 @@ object Gunzip {
       out
     }
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gunzip"),
-    new ExpressionInfo(classOf[Gunzip].getName, "gunzip"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"gunzip expects exactly 1 binary argument, got ${children.length}")
-      Gunzip(children.head)
-    })
 }

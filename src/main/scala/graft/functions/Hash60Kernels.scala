@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,108 +121,3 @@ object Hash60Kernels {
   }
 }
 
-/** `hash60_array(array<string>) -> array<bigint>` — see
-  * [[Hash60Kernels.hashArray]].
-  */
-case class Hash60Array(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "hash60_array"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"hash60_array requires array<string>, got $t")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    Hash60Kernels.hashArray(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.Hash60Kernels.hashArray($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Hash60Array =
-    copy(child = newChild)
-}
-
-object Hash60Array {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hash60_array"),
-    new ExpressionInfo(classOf[Hash60Array].getName, "hash60_array"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"hash60_array expects 1 argument (array<string>), got ${children.length}")
-      Hash60Array(children.head)
-    }
-  )
-}
-
-/** `md5_bucket_counts(array<string>, int) -> array<struct<bucket,cnt>>` —
-  * see [[Hash60Kernels.bucketCounts]].
-  */
-case class Md5BucketCounts(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = Hash60Kernels.BucketCountType
-  override def prettyName: String = "md5_bucket_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"md5_bucket_counts requires (array<string>, foldable int), got ${left.dataType} / ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Hash60Kernels.bucketCounts(a.asInstanceOf[ArrayData], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Hash60Kernels.bucketCounts($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Md5BucketCounts =
-    copy(left = newLeft, right = newRight)
-}
-
-object Md5BucketCounts {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("md5_bucket_counts"),
-    new ExpressionInfo(classOf[Md5BucketCounts].getName, "md5_bucket_counts"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"md5_bucket_counts expects 2 arguments (array<string>, int), got ${children.length}")
-      Md5BucketCounts(children.head, children(1))
-    }
-  )
-}
-
-/** `trigram_bucket_counts(string, int) -> array<struct<bucket,cnt>>` —
-  * see [[Hash60Kernels.trigramCounts]].
-  */
-case class TrigramBucketCounts(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = Hash60Kernels.BucketCountType
-  override def prettyName: String = "trigram_bucket_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"trigram_bucket_counts requires (string, foldable int), got ${left.dataType} / ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Hash60Kernels.trigramCounts(a.asInstanceOf[UTF8String], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Hash60Kernels.trigramCounts($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): TrigramBucketCounts =
-    copy(left = newLeft, right = newRight)
-}
-
-object TrigramBucketCounts {
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("trigram_bucket_counts"),
-    new ExpressionInfo(classOf[TrigramBucketCounts].getName, "trigram_bucket_counts"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"trigram_bucket_counts expects 2 arguments (string, int), got ${children.length}")
-      TrigramBucketCounts(children.head, children(1))
-    }
-  )
-}

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -130,17 +129,4 @@ case class JaccardSorted(left: Expression, right: Expression) extends BinaryExpr
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardSorted =
     copy(left = newLeft, right = newRight)
-}
-
-object JaccardSorted {
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jaccard_sorted"),
-    new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"jaccard_sorted expects exactly 2 arguments (array<bigint>), got ${children.length}")
-      JaccardSorted(children.head, children(1))
-    }
-  )
 }

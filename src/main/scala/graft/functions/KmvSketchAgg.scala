@@ -2,45 +2,37 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
-/** K-Minimum-Values distinct-count sketch as a `TypedImperativeAggregate` —
-  * the production form of [[KmvSketch]] (same estimator, same state as a set
-  * function, bit-identical result): a mutable bounded ordered set replaces
-  * the immutable sorted `Seq`, so the per-row cost is O(log K) instead of the
-  * Aggregator's O(K) copy-and-sort, and the buffer serializes to `8·|state|`
-  * bytes for the map-side-combine shuffle.
+/** The K-Minimum-Values buffer both KMV aggregates share: the K smallest
+  * DISTINCT 60-bit hashes of the group, as a mutable bounded ordered set.
+  * The production form of [[KmvSketch]] (same state, bit-identical result):
+  * the per-row cost is O(log K) instead of the Aggregator's O(K)
+  * copy-and-sort, and the buffer serializes to `8·|state|` bytes for the
+  * map-side-combine shuffle.
   *
-  * Determinism: the state (the K smallest DISTINCT hashes) is a pure set
-  * function of the input — insertion and merge order cannot change it — so
-  * the estimate is exactly reproducible in the DuckDB oracle and agrees
-  * bit-for-bit with the [[KmvSketch]] Aggregator (asserted in KmvSketchSpec).
-  *
-  * SQL surface: `kmv_distinct(hash BIGINT) -> DOUBLE`, installed by
-  * [[graft.GraftExtensions]].
+  * Determinism: the state is a pure set function of the input — insertion
+  * and merge order cannot change it — so every result derived from it is
+  * exactly reproducible in the DuckDB oracle. The two aggregates differ
+  * only in `eval`.
   */
-case class KmvSketchAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
+abstract class KmvBufferAgg
   extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
   with UnaryLike[Expression] {
 
-  private val K = KmvSketch.K
+  protected val K: Int = KmvSketch.K
 
-  override def prettyName: String = "kmv_distinct"
-  override def dataType: DataType = DoubleType
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"kmv_distinct requires BIGINT hashes, got $t")
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires BIGINT hashes, got $t")
   }
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
@@ -66,10 +58,6 @@ case class KmvSketchAgg(
     a
   }
 
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
-    if (buf.size < K) buf.size.toDouble
-    else (K - 1).toDouble * KmvSketch.HashSpace / buf.last
-
   override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + 8 * buf.size)
     bb.putInt(buf.size)
@@ -84,6 +72,24 @@ case class KmvSketchAgg(
     (0 until n).foreach(_ => buf.add(bb.getLong))
     buf
   }
+}
+
+/** `kmv_distinct(hash BIGINT) -> DOUBLE`: the KMV distinct-count estimate
+  * of [[KmvSketch]] — exact below K distinct hashes, else
+  * `(K−1)·2^60/h_K` — agreeing bit-for-bit with the Aggregator (asserted in
+  * KmvSketchSpec).
+  */
+case class KmvSketchAgg(
+    child: Expression,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0) extends KmvBufferAgg {
+
+  override def prettyName: String = "kmv_distinct"
+  override def dataType: DataType = DoubleType
+
+  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
+    if (buf.size < K) buf.size.toDouble
+    else (K - 1).toDouble * KmvSketch.HashSpace / buf.last
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -93,15 +99,39 @@ case class KmvSketchAgg(
     copy(child = newChild)
 }
 
-object KmvSketchAgg {
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kmv_distinct"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_distinct"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"kmv_distinct expects exactly 1 argument (BIGINT hash), got ${children.length}")
-      KmvSketchAgg(children.head)
-    }
-  )
+/** `kmv_sketch(hash BIGINT) -> ARRAY<BIGINT>`: the sketch SET itself,
+  * sorted ascending, instead of the estimate.
+  *
+  * This is the aggregate that makes KMV SET ALGEBRA a plain partial+final
+  * aggregation: per-group sketches feed union (K smallest of two merged
+  * sketches), intersection (inclusion–exclusion), and Jaccard estimates
+  * downstream (`corpus_source_overlap_kmv`) — with O(K) state per group and
+  * map-side combine, where the window-rank formulation shuffles and sorts
+  * the group's entire distinct-hash universe to keep 64 rows of it. The
+  * DuckDB oracle's rank-K prefix (`row_number ≤ K` over distinct hashes)
+  * reproduces the array element-for-element. The estimator contract
+  * downstream: a sketch shorter than K IS the group's full distinct set
+  * (exact); at length K the K-th minimum drives `(K−1)·2^60/h_K`.
+  */
+case class KmvSketchSetAgg(
+    child: Expression,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0) extends KmvBufferAgg {
+
+  override def prettyName: String = "kmv_sketch"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
+    val out = Array.ofDim[Long](buf.size)
+    var i = 0
+    buf.forEach(h => { out(i) = h; i += 1 }) // TreeSet iterates ascending
+    ArrayData.toArrayData(out)
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchSetAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchSetAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): KmvSketchSetAgg =
+    copy(child = newChild)
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -122,15 +121,4 @@ object LevWithin {
     }
     prev(m) <= k
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("lev_within"),
-    new ExpressionInfo(classOf[LevWithin].getName, "lev_within"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3,
-        s"lev_within expects exactly 3 arguments (string, string, int), got ${children.length}")
-      LevWithin(children.head, children(1), children(2))
-    }
-  )
 }

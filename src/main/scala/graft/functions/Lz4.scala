@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** `lz4_inflate(binary) -> binary`: decompress an LZ4 FRAME stream (the
   * `.lz4` file format, lz4 Frame spec v1.6.x) — all frames of a
   * concatenated input, the gzip-member / zstd-frame cat semantics. With
@@ -13,8 +7,8 @@ import org.apache.spark.sql.types._
   * codecs ML data drops actually ship with (`.jsonl.lz4` / `.tar.lz4`
   * are the fast-path choice for rsync-scale snapshots).
   *
-  * Same hot-path rationale as [[Gunzip]] / [[ZstdInflate]]: an
-  * Expression keeps decompression inside whole-stage codegen on the
+  * Same hot-path rationale as [[Gunzip]] / [[ZstdInflate]]: a native
+  * kernel keeps decompression inside whole-stage codegen on the
   * scan→parse path, one static call per row. The kernel is Spark's OWN
   * bundled lz4-java (`net.jpountz.lz4`, the library Spark already uses
   * for shuffle/event-log codecs) via `LZ4FrameInputStream`, which
@@ -22,28 +16,6 @@ import org.apache.spark.sql.types._
   * structure, and any content checksum; failures surface as a named
   * IllegalArgumentException instead of silent garbage.
   */
-case class Lz4Inflate(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "lz4_inflate"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"lz4_inflate requires binary input, got ${child.dataType}")
-
-  override def nullSafeEval(bytes: Any): Any =
-    Lz4Inflate.inflate(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Lz4Inflate.inflate($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Lz4Inflate =
-    copy(child = newChild)
-}
-
 object Lz4Inflate {
 
   /** All frames decompressed and concatenated; called from both
@@ -74,16 +46,6 @@ object Lz4Inflate {
     }
     out.toByteArray
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("lz4_inflate"),
-    new ExpressionInfo(classOf[Lz4Inflate].getName, "lz4_inflate"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"lz4_inflate expects exactly 1 binary argument, got ${children.length}")
-      Lz4Inflate(children.head)
-    })
 }
 
 /** `lz4_deflate(binary) -> binary`: compress a payload into one LZ4
@@ -93,28 +55,6 @@ object Lz4Inflate {
   * per-block integrity, so the frame-level xxHash32 is what catches a
   * flipped bit before it decodes to silent garbage.
   */
-case class Lz4Deflate(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "lz4_deflate"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"lz4_deflate requires binary input, got ${child.dataType}")
-
-  override def nullSafeEval(bytes: Any): Any =
-    Lz4Deflate.deflate(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Lz4Deflate.deflate($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Lz4Deflate =
-    copy(child = newChild)
-}
-
 object Lz4Deflate {
 
   /** One frame, 64 KB independent blocks, content checksum on; called
@@ -133,14 +73,4 @@ object Lz4Deflate {
     } finally fo.close()
     out.toByteArray
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("lz4_deflate"),
-    new ExpressionInfo(classOf[Lz4Deflate].getName, "lz4_deflate"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"lz4_deflate expects exactly 1 binary argument, got ${children.length}")
-      Lz4Deflate(children.head)
-    })
 }

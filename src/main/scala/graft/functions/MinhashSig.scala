@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -87,16 +86,6 @@ object MinhashSig {
     }
     if (!seen) null else new GenericArrayData(out)
   }
-
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"minhash_sig expects exactly 2 arguments (array<bigint>, int), got ${children.length}")
-      MinhashSig(children.head, children(1))
-    }
-  )
 }
 
 /** `simhash_sig(g array<bigint>) -> bigint` — the 64-bit SimHash of one
@@ -173,14 +162,4 @@ object SimhashSig {
       java.lang.Long.valueOf(sh)
     }
   }
-
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash_sig"),
-    new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"simhash_sig expects exactly 1 argument (array<bigint>), got ${children.length}")
-      SimhashSig(children.head)
-    }
-  )
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `nfc_normalize(string) -> string`: Unicode canonical composition
@@ -13,35 +8,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle, and dedup identically. Named after DuckDB's own
   * `nfc_normalize`, which is the oracle twin.
   *
-  * Why an `Expression`: normalization sits on the scan→clean hot path of
+  * Why a native kernel: normalization sits on the scan→clean hot path of
   * every document; a codegen'd call into the JDK's `java.text.Normalizer`
   * (ICU-derived composition tables) keeps it inside whole-stage codegen
   * with a pure-ASCII fast path — the overwhelmingly common case in mixed
   * corpora — that returns the input UTF8String untouched (no transcode,
   * no allocation; NFC is the identity on ASCII).
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires a string input, got ${child.dataType}")
-
-  override def nullSafeEval(s: Any): Any =
-    NfcNormalize.nfc(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.NfcNormalize.nfc($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
 
   /** NFC composition, called from both interpreted and generated code.
@@ -56,14 +29,4 @@ object NfcNormalize {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"nfc_normalize expects exactly 1 string argument, got ${children.length}")
-      NfcNormalize(children.head)
-    })
 }

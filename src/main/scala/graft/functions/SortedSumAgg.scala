@@ -4,11 +4,10 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -128,15 +127,4 @@ object SortedSumAgg {
           "large needs a bounded-state sum (pairwise/Kahan, or integer " +
           "pre-bucketing) instead of the exact sorted fold")
     }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_sum"),
-    new ExpressionInfo(classOf[SortedSumAgg].getName, "sorted_sum"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"sorted_sum expects exactly 1 argument (DOUBLE), got ${children.length}")
-      SortedSumAgg(children.head)
-    }
-  )
 }

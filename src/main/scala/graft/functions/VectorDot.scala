@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -99,17 +98,4 @@ case class VectorDot(left: Expression, right: Expression) extends BinaryExpressi
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VectorDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorDot {
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"vec_dot expects exactly 2 arguments (array<float|double>), got ${children.length}")
-      VectorDot(children.head, children(1))
-    }
-  )
 }

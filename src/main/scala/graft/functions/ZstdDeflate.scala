@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** `zstd_deflate(binary) -> binary`: compress a payload into one
   * Zstandard frame — the sink-side twin of [[ZstdInflate]]. Compressing
   * in the projection (instead of a codec at the file layer) is how a
@@ -19,28 +13,6 @@ import org.apache.spark.sql.types._
   * real-world mechanism that catches it (ZstdInflateSpec pins exactly
   * that corruption reject through [[ZstdInflate]]).
   */
-case class ZstdDeflate(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "zstd_deflate"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"zstd_deflate requires binary input, got ${child.dataType}")
-
-  override def nullSafeEval(bytes: Any): Any =
-    ZstdDeflate.deflate(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.ZstdDeflate.deflate($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): ZstdDeflate =
-    copy(child = newChild)
-}
-
 object ZstdDeflate {
 
   /** One frame, default level, frame checksum on; called from both
@@ -53,14 +25,4 @@ object ZstdDeflate {
       ctx.compress(bytes)
     } finally ctx.close()
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("zstd_deflate"),
-    new ExpressionInfo(classOf[ZstdDeflate].getName, "zstd_deflate"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"zstd_deflate expects exactly 1 binary argument, got ${children.length}")
-      ZstdDeflate(children.head)
-    })
 }

@@ -1,17 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** `zstd_inflate(binary) -> binary`: decompress a Zstandard payload — ALL
   * frames of a concatenated stream (RFC 8878 §3: a stream is any number
   * of appended frames), which is the shape `.zst`-shipped corpora
   * actually arrive in (zstd's own `cat` semantics, the gzip-member twin).
   *
-  * Why an `Expression`: the same hot-path rationale as [[Gunzip]] —
+  * Why a native kernel: the same hot-path rationale as [[Gunzip]] —
   * decompression belongs inside whole-stage codegen on the scan→parse
   * path, one static call per row, no `mapPartitions` encode/decode
   * fence. The kernel rides Spark's OWN bundled zstd-jni binding (the
@@ -24,28 +18,6 @@ import org.apache.spark.sql.types._
   * any per-frame content checksum, and every failure surfaces as a named
   * IllegalArgumentException instead of silent garbage.
   */
-case class ZstdInflate(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "zstd_inflate"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"zstd_inflate requires binary input, got ${child.dataType}")
-
-  override def nullSafeEval(bytes: Any): Any =
-    ZstdInflate.inflate(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.ZstdInflate.inflate($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): ZstdInflate =
-    copy(child = newChild)
-}
-
 object ZstdInflate {
 
   /** All frames decompressed and concatenated; called from both
@@ -70,14 +42,4 @@ object ZstdInflate {
     }
     out.toByteArray
   }
-
-  /** FunctionRegistry description for `SparkSessionExtensions.injectFunction`. */
-  val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("zstd_inflate"),
-    new ExpressionInfo(classOf[ZstdInflate].getName, "zstd_inflate"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"zstd_inflate expects exactly 1 binary argument, got ${children.length}")
-      ZstdInflate(children.head)
-    })
 }

@@ -303,8 +303,8 @@ object FuzzyJoin extends QueryModule {
   private val entityClustersSql =
     s"""$pairsCte, edges AS (
           SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
-        ), ${graft.pipeline.Dedup.ccLabelCtesDuck()}, lbl AS (
-          SELECT id, l AS cluster_id FROM ${graft.pipeline.Dedup.ccLabelFinal()}
+        ), ${graft.pipeline.Dedup.ccLabelCtesDuck}, lbl AS (
+          SELECT id, l AS cluster_id FROM ${graft.pipeline.Dedup.ccLabelFinal}
         )
         SELECT l.cluster_id, c.c_name AS canonical_name,
                CAST(COUNT(*) AS BIGINT) AS n_members,

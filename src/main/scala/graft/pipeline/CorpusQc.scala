@@ -1021,8 +1021,8 @@ object CorpusQc extends QueryModule {
   /** `text_entropy_quality`: per-doc byte-histogram Shannon entropy +
     * alphabet width + keep flag — the cheap quality screens that run before
     * any tokenization. One map-only scan: both signals are native
-    * codegen'd expressions ([[graft.functions.ByteEntropyMilli]],
-    * [[graft.functions.ByteDistinctCount]]) so at 100 TB this is a
+    * codegen'd kernels (`byte_entropy_milli`, `byte_distinct_count`; see
+    * [[graft.functions.ByteStats]]) so at 100 TB this is a
     * projection on the corpus scan, never an explode-per-byte shuffle (the
     * oracle twin, which has no custom functions, pays exactly that unnest —
     * the 3-line SQL is the spec, the expression is the scale path).

@@ -55,22 +55,24 @@ object Dedup extends QueryModule {
     s"CAST(('0x' || substring(md5($expr), 1, 15)) AS BIGINT)"
 
   /** Bounded-iteration connected-components oracle chain (DuckDB): from a
-    * SYMMETRIC `edges(a, b)` CTE, `rounds` rounds of min-label propagation
+    * SYMMETRIC `edges(a, b)` CTE, `CcRounds` rounds of min-label propagation
     * each followed by one pointer jump (`l <- l(l)`), ending in
-    * `lbl$rounds(id, l)` — the oracle twin of the Spark [[components]]
+    * `lbl$CcRounds(id, l)` — the oracle twin of the Spark [[components]]
     * iteration. This replaces the recursive-CTE transitive closure, whose
     * path enumeration explodes on dense graphs (20 GB+ and no convergence
     * on the 262k-edge d=1 name graph at sf0.1) with work bounded at
-    * `rounds × |edges|`. Correctness of a FIXED round count: labels only
+    * `CcRounds × |edges|`. Correctness of a FIXED round count: labels only
     * decrease and any propagation fixed point is exactly the per-component
     * min labeling (local consistency forces label equality across every
     * edge, and a constant label above the component min contradicts
     * monotonicity at the min node), while the pointer jump doubles covered
-    * distance per round — so `rounds` = 20 converges for any component a
+    * distance per round — so 20 rounds converge for any component a
     * million nodes deep; the driver's equality gate against the Spark
     * labels would catch under-iteration.
     */
-  private[graft] def ccLabelCtesDuck(rounds: Int = 20): String = {
+  private val CcRounds = 20
+
+  private[graft] val ccLabelCtesDuck: String = {
     // every stage MATERIALIZED: DuckDB otherwise inlines a CTE per
     // reference, expanding the upstream edge scan once per round — which
     // re-opens the source parquet hundreds of times ("Too many open
@@ -80,7 +82,7 @@ object Dedup extends QueryModule {
          lbl0 AS MATERIALIZED (
           SELECT e.a AS id, LEAST(e.a, MIN(e.b)) AS l FROM edges_m e GROUP BY e.a
         )"""
-    val steps = (1 to rounds).map { r =>
+    val steps = (1 to CcRounds).map { r =>
       s"""prop$r AS MATERIALIZED (
             SELECT e.a AS id, LEAST(MIN(sa.l), MIN(sb.l)) AS l
             FROM edges_m e
@@ -94,7 +96,7 @@ object Dedup extends QueryModule {
     }
     // in-query fixpoint assertion: labels are monotone non-increasing, so a
     // full round that changes NOTHING is a fixed point (= exact component
-    // minima, per the proof above). If round `rounds` still moved a label,
+    // minima, per the proof above). If round `CcRounds` still moved a label,
     // the chain was under-iterated and the oracle would silently drift from
     // Spark — which would be misdiagnosed as an engine bug. error() makes
     // under-iteration a LOUD oracle failure instead; the `+ 0` through the
@@ -102,12 +104,12 @@ object Dedup extends QueryModule {
     val check =
       s"""ccconv AS MATERIALIZED (
             SELECT CASE WHEN COUNT(*) = 0 THEN 0
-                   ELSE error('ccLabelCtesDuck: labels still moving after $rounds rounds — raise `rounds`')
+                   ELSE error('ccLabelCtesDuck: labels still moving after $CcRounds rounds — raise `rounds`')
                    END AS z
-            FROM lbl${rounds - 1} x JOIN lbl$rounds y ON x.id = y.id
+            FROM lbl${CcRounds - 1} x JOIN lbl$CcRounds y ON x.id = y.id
             WHERE x.l <> y.l
           ), lblcc AS MATERIALIZED (
-            SELECT s.id, s.l + (SELECT z FROM ccconv) AS l FROM lbl$rounds s
+            SELECT s.id, s.l + (SELECT z FROM ccconv) AS l FROM lbl$CcRounds s
           )"""
     (init +: steps :+ check).mkString(",\n")
   }
@@ -115,7 +117,7 @@ object Dedup extends QueryModule {
   /** The final label CTE name emitted by [[ccLabelCtesDuck]] (labels routed
     * through the convergence gate).
     */
-  private[graft] def ccLabelFinal(rounds: Int = 20): String = "lblcc"
+  private[graft] val ccLabelFinal: String = "lblcc"
 
   /** Distinct token hashes per document. */
   val tokenHashes = s"transform($tokenSet, w -> ${hash60("w")})"
@@ -1072,8 +1074,8 @@ object Dedup extends QueryModule {
           SELECT ia AS a, ib AS b FROM pairs
           UNION
           SELECT ib, ia FROM pairs
-        ), ${ccLabelCtesDuck()}, lbl AS (
-          SELECT id AS doc_id, l AS canon FROM ${ccLabelFinal()}
+        ), $ccLabelCtesDuck, lbl AS (
+          SELECT id AS doc_id, l AS canon FROM $ccLabelFinal
         ), sizes AS (
           SELECT canon, CAST(COUNT(*) AS BIGINT) AS sz FROM lbl GROUP BY canon
         ), hist AS (
@@ -1124,8 +1126,8 @@ object Dedup extends QueryModule {
           SELECT ia AS a, ib AS b FROM pairs
           UNION
           SELECT ib, ia FROM pairs
-        ), ${ccLabelCtesDuck()}, lbl AS (
-          SELECT id AS doc_id, l AS canon FROM ${ccLabelFinal()}
+        ), $ccLabelCtesDuck, lbl AS (
+          SELECT id AS doc_id, l AS canon FROM $ccLabelFinal
         )
         SELECT d.doc_id,
                COALESCE(l.canon, d.doc_id) AS canonical_id,
@@ -1184,8 +1186,8 @@ object Dedup extends QueryModule {
           SELECT ia AS a, ib AS b FROM pairs
           UNION
           SELECT ib, ia FROM pairs
-        ), ${ccLabelCtesDuck()}, lbl AS (
-          SELECT id AS doc_id, l AS canon FROM ${ccLabelFinal()}
+        ), $ccLabelCtesDuck, lbl AS (
+          SELECT id AS doc_id, l AS canon FROM $ccLabelFinal
         ), q AS (
           SELECT doc_id, quality_score FROM (${TextAnalysis.qualityScoreSql})
         ), base AS (

@@ -290,11 +290,9 @@ object Exif extends QueryModule {
         when(col("doc_id") % 2 === 0, expr(s"unhex($tiffLe)"))
           .otherwise(expr(s"unhex($app1)")).as("payload"))
     payloads.as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(64).flatMap(_.iterator.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.bigEndian, m.make, m.model, m.orientation, m.dtOriginal, m.pixelX)
-        })
+      .map { case (id, bytes) =>
+        val m = parse(bytes)
+        (id, m.bigEndian, m.make, m.model, m.orientation, m.dtOriginal, m.pixelX)
       }
       .toDF("doc_id", "big_endian", "make", "model", "orientation",
         "dt_original", "pixel_x")

@@ -190,7 +190,7 @@ object Multimodal extends QueryModule {
     * packing, chunking, and popcount are pure integer ops.
     */
   def ahashDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    // signature via the codegen'd graft.functions.Ahash64Sampled kernel
+    // signature via the codegen'd ahash64_sampled kernel
     // (r18 — was three interpreted HOF folds per row: 64 conv byte
     // parses, the ascending mean fold, the bit-pack fold; the kernel
     // reproduces the same fixed ascending IEEE mean fold and bit pack,
@@ -408,7 +408,7 @@ object Multimodal extends QueryModule {
 
   /** `mm_real_ahash_dedup`: the image-dedup capability END TO END over
     * REALLY DECODED pixels — build a genuine P6 file per document, parse it
-    * with [[MediaCodec.decodePpm]] inside the typed batcher, perceptual-hash
+    * with [[MediaCodec.decodePpm]] in a typed `map`, perceptual-hash
     * the DECODED raster ([[MediaCodec.ahash64]]: 8x8 average-pool, integer
     * cross-multiplication threshold — no doubles anywhere), then the same
     * masked chunk-pigeonhole blocking + popcount verify as the payload-byte
@@ -417,17 +417,15 @@ object Multimodal extends QueryModule {
     * exact integer test `64 * rgbSum(c) > totalSum`), so a decode, hash,
     * or blocking bug all land as value mismatches.
     *
-    * Scale: decode+hash is map-only inside the per-batch decoder context;
-    * only 8-byte signatures shuffle into the band join.
+    * Scale: decode+hash is map-only; only 8-byte signatures shuffle into
+    * the band join.
     */
   def realAhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val sigs = graft.Scratch.materialize(
-      ppmPayloads(spark, sfDir).as[MediaRow].mapPartitions { rows =>
-        rows.grouped(64).map { batch =>
-          batch.map(r => (r.doc_id, MediaCodec.ahash64(MediaCodec.decode(r.payload))))
-        }.flatten
-      }.toDF("doc_id", "ah"),
+      ppmPayloads(spark, sfDir).as[MediaRow]
+        .map(r => (r.doc_id, MediaCodec.ahash64(MediaCodec.decode(r.payload))))
+        .toDF("doc_id", "ah"),
       "graft_real_ahash")
     ahashPairs(sigs)
   }
@@ -694,10 +692,9 @@ object Multimodal extends QueryModule {
     * luma from the document bytes at the planar offsets, so a header-parse,
     * marker-walk, or plane-offset bug all land as value mismatches.
     *
-    * Scale: decode is map-only inside the per-batch decoder context; frame
-    * sampling happens AT the decoder (the skipped frames never leave it),
-    * which is the point of the batched contract — at 100 TB the codec
-    * drops frames where the bytes live, not after a shuffle.
+    * Scale: decode is map-only; frame sampling happens AT the decoder (the
+    * skipped frames never leave it) — at 100 TB the codec drops frames
+    * where the bytes live, not after a shuffle.
     */
   /** MIXED-subsampling Y4M payloads: even doc_ids get a genuine 4x4 C444
     * clip (48 document bytes per frame as the three full planes), odd
@@ -727,18 +724,14 @@ object Multimodal extends QueryModule {
 
   def realFrames(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    y4mPayloads(spark, sfDir).as[MediaRow].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val clip = MediaCodec.decodeY4m(r.payload)
-          (0 until clip.frames.length by Y4mSampleEvery).map { f =>
-            val y = clip.yPlane(f)
-            var sum = 0L
-            var i = 0
-            while (i < y.length) { sum += (y(i) & 0xff); i += 1 }
-            (r.doc_id, f, (sum / (255.0 * y.length)).toFloat.toDouble)
-          }
-        }
+    y4mPayloads(spark, sfDir).as[MediaRow].flatMap { r =>
+      val clip = MediaCodec.decodeY4m(r.payload)
+      (0 until clip.frames.length by Y4mSampleEvery).map { f =>
+        val y = clip.yPlane(f)
+        var sum = 0L
+        var i = 0
+        while (i < y.length) { sum += (y(i) & 0xff); i += 1 }
+        (r.doc_id, f, (sum / (255.0 * y.length)).toFloat.toDouble)
       }
     }.toDF("doc_id", "frame_no", "y_frac")
       .orderBy("doc_id", "frame_no")
@@ -776,15 +769,11 @@ object Multimodal extends QueryModule {
     */
   def realChroma(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    y4mPayloads(spark, sfDir).as[MediaRow].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val clip = MediaCodec.decodeY4m(r.payload)
-          val u = clip.uPlane(0)
-          val v = clip.vPlane(0)
-          (0 until 16).map(p => (r.doc_id, p, u(p) & 0xff, v(p) & 0xff))
-        }
-      }
+    y4mPayloads(spark, sfDir).as[MediaRow].flatMap { r =>
+      val clip = MediaCodec.decodeY4m(r.payload)
+      val u = clip.uPlane(0)
+      val v = clip.vPlane(0)
+      (0 until 16).map(p => (r.doc_id, p, u(p) & 0xff, v(p) & 0xff))
     }.toDF("doc_id", "px", "u", "v")
       .orderBy("doc_id", "px")
   }
@@ -1298,7 +1287,7 @@ object Multimodal extends QueryModule {
     import spark.implicits._
     // the byte-aligned LZW literal blocks (pixel = byte mod 128, clear
     // code per sub-block, end code after the remainder) through the
-    // codegen'd graft.functions.GifPixelBlocksHex kernel — r18: was one
+    // codegen'd gif_pixel_blocks_hex kernel — r18: was one
     // interpreted conv/hex/lpad lambda eval per pixel (192/doc);
     // EmitterKernelSpec pins the kernel to the retired per-block concat
     val gifHex = s"""concat('$GifPrefixHex',
@@ -1455,7 +1444,7 @@ object Multimodal extends QueryModule {
     * r18 optimization (guide §4): the scan — DC diffs, categories,
     * variable-length Huffman code bits, per-segment 1-padding, FF00
     * stuffing, RSTn markers — is emitted by the codegen'd
-    * [[graft.functions.JpegDcScanHex]] kernel in ONE call per document.
+    * `jpeg_dc_scan_hex` kernel in ONE call per document.
     * The previous formulation assembled it from ~10 chained interpreted
     * (CodegenFallback) higher-order-function columns building per-block
     * '0'/'1' bit STRINGS and re-parsing them 8 chars at a time with
@@ -1525,7 +1514,7 @@ object Multimodal extends QueryModule {
     val (h1, sos2) = MediaCodec.jpegProgHeader(8, 8 * JpegBlocks, JpegRst)
     val header = h1.map("%02X".format(_)).mkString
     val sos2Hex = sos2.map("%02X".format(_)).mkString
-    // both scans through the codegen'd graft.functions.JpegDcScanHex
+    // both scans through the codegen'd jpeg_dc_scan_hex
     // kernel (r18 — see jpegDcPayload: was ~15 chained interpreted HOF
     // columns per document): mode 1 = the Al=1 DC-first scan (point-
     // transformed diffs, 0-reset predictor, no EOB), mode 2 = the raw
@@ -1640,15 +1629,11 @@ object Multimodal extends QueryModule {
       .select(col("doc_id"), lit("video").as("media_type"),
         when(col("doc_id") % 2 === 0, clip("C422", 32))
           .otherwise(clip("C411", 24)).as("payload"))
-    clips.as[MediaRow].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val clip = MediaCodec.decodeY4m(r.payload)
-          val u = clip.uPlane(0)
-          val v = clip.vPlane(0)
-          (0 until 16).map(p => (r.doc_id, p, u(p) & 0xff, v(p) & 0xff))
-        }
-      }
+    clips.as[MediaRow].flatMap { r =>
+      val clip = MediaCodec.decodeY4m(r.payload)
+      val u = clip.uPlane(0)
+      val v = clip.vPlane(0)
+      (0 until 16).map(p => (r.doc_id, p, u(p) & 0xff, v(p) & 0xff))
     }.toDF("doc_id", "px", "u", "v")
       .orderBy("doc_id", "px")
   }
@@ -1682,7 +1667,7 @@ object Multimodal extends QueryModule {
   /** `mm_real_thumbnail`: REAL decode + RESIZE — the brief's resize verb,
     * executed on decoded pixels, oracle-checked per channel. Spark builds
     * the genuine 8x8 P6 files ([[ppmPayloads]]), [[MediaCodec.decodePpm]]
-    * parses them in the typed batcher, [[MediaCodec.resize]] box-averages
+    * parses them in a typed `flatMap`, [[MediaCodec.resize]] box-averages
     * to [[ThumbSide]]² (each target pixel the truncating integer mean of
     * its 2x2 source box — exact in any engine), and every thumbnail pixel
     * emits its (r, g, b). The oracle recomputes each box mean from the
@@ -1691,16 +1676,12 @@ object Multimodal extends QueryModule {
     */
   def realThumbnail(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    ppmPayloads(spark, sfDir).as[MediaRow].mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { row =>
-          val thumb = MediaCodec.resize(
-            MediaCodec.decodePpm(row.payload), ThumbSide, ThumbSide)
-          (0 until ThumbSide * ThumbSide).map { p =>
-            (row.doc_id, p, thumb.rgb(3 * p) & 0xff,
-              thumb.rgb(3 * p + 1) & 0xff, thumb.rgb(3 * p + 2) & 0xff)
-          }
-        }
+    ppmPayloads(spark, sfDir).as[MediaRow].flatMap { row =>
+      val thumb = MediaCodec.resize(
+        MediaCodec.decodePpm(row.payload), ThumbSide, ThumbSide)
+      (0 until ThumbSide * ThumbSide).map { p =>
+        (row.doc_id, p, thumb.rgb(3 * p) & 0xff,
+          thumb.rgb(3 * p + 1) & 0xff, thumb.rgb(3 * p + 2) & 0xff)
       }
     }.toDF("doc_id", "px", "r", "g", "b")
       .select(col("doc_id"), col("px"),

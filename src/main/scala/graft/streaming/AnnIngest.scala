@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.SimilaritySearch
 
@@ -41,11 +41,6 @@ object AnnIngest {
   def start(vecStream: DataFrame, sfDir: String, outDir: String,
             checkpointDir: String,
             triggerInterval: String = "1 second"): StreamingQuery =
-    vecStream.writeStream
-      .queryName("ann_ingest")
-      .outputMode("append")
-      .foreachBatch(batchWriter(vecStream.sparkSession, sfDir, outDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(vecStream, "ann_ingest", checkpointDir, triggerInterval)(
+      batchWriter(vecStream.sparkSession, sfDir, outDir))
 }

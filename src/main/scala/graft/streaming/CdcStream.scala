@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.History
 
@@ -45,13 +45,8 @@ object CdcStream {
 
   def start(changeStream: DataFrame, stateDir: String, checkpointDir: String,
             key: String, triggerInterval: String = "1 second"): StreamingQuery =
-    changeStream.writeStream
-      .queryName("cdc_apply")
-      .outputMode("append")
-      .foreachBatch(batchMerger(changeStream.sparkSession, stateDir, key))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(changeStream, "cdc_apply", checkpointDir, triggerInterval)(
+      batchMerger(changeStream.sparkSession, stateDir, key))
 
   /** Latest materialized state version under `stateDir`; −1 when no
     * version has landed (missing or empty directory).

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.pipeline.{CorpusQc, Dedup, HtmlExtract}
 
@@ -177,13 +177,8 @@ object CorpusIngest {
 
   def start(docStream: DataFrame, sfDir: String, outDir: String,
             checkpointDir: String, triggerInterval: String = "1 second"): StreamingQuery =
-    docStream.writeStream
-      .queryName("corpus_ingest")
-      .outputMode("append")
-      .foreachBatch(batchWriter(docStream.sparkSession, sfDir, outDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(docStream, "corpus_ingest", checkpointDir, triggerInterval)(
+      batchWriter(docStream.sparkSession, sfDir, outDir))
 
   // ---- incremental dataset card ----
 
@@ -343,33 +338,18 @@ object CorpusIngest {
   def startSitemapFrontier(docStream: DataFrame, inventory: DataFrame,
                            stateDir: String, checkpointDir: String,
                            triggerInterval: String = "1 second"): StreamingQuery =
-    docStream.writeStream
-      .queryName("corpus_ingest_sitemap_frontier")
-      .outputMode("append")
-      .foreachBatch(frontierStateWriter(docStream.sparkSession, inventory, stateDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(docStream, "corpus_ingest_sitemap_frontier", checkpointDir, triggerInterval)(
+      frontierStateWriter(docStream.sparkSession, inventory, stateDir))
 
   def startPercentile(docStream: DataFrame, stateDir: String,
                       checkpointDir: String,
                       triggerInterval: String = "1 second"): StreamingQuery =
-    docStream.writeStream
-      .queryName("corpus_ingest_percentile")
-      .outputMode("append")
-      .foreachBatch(percentileStateWriter(docStream.sparkSession, stateDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(docStream, "corpus_ingest_percentile", checkpointDir, triggerInterval)(
+      percentileStateWriter(docStream.sparkSession, stateDir))
 
   def startCard(docStream: DataFrame, sfDir: String, stateDir: String,
                 checkpointDir: String,
                 triggerInterval: String = "1 second"): StreamingQuery =
-    docStream.writeStream
-      .queryName("corpus_ingest_card")
-      .outputMode("append")
-      .foreachBatch(cardStateWriter(docStream.sparkSession, sfDir, stateDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(docStream, "corpus_ingest_card", checkpointDir, triggerInterval)(
+      cardStateWriter(docStream.sparkSession, sfDir, stateDir))
 }

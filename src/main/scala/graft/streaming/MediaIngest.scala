@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.pipeline.{BatchedDecode, MediaRow}
@@ -149,11 +149,6 @@ object MediaIngest {
 
   def start(mediaStream: DataFrame, outDir: String, checkpointDir: String,
             triggerInterval: String = "1 second"): StreamingQuery =
-    mediaStream.writeStream
-      .queryName("media_ingest")
-      .outputMode("append")
-      .foreachBatch(batchWriter(mediaStream.sparkSession, outDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(mediaStream, "media_ingest", checkpointDir, triggerInterval)(
+      batchWriter(mediaStream.sparkSession, outDir))
 }

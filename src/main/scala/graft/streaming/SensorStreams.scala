@@ -394,13 +394,8 @@ object SensorStreams {
 
   def startDurable(df: DataFrame, outDir: String, checkpointDir: String,
                    triggerInterval: String = "10 seconds"): StreamingQuery =
-    df.writeStream
-      .queryName("durable_sink")
-      .outputMode("append")
-      .foreachBatch(durableBatchWriter(outDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    BatchSink.start(df, "durable_sink", checkpointDir, triggerInterval)(
+      durableBatchWriter(outDir))
 
   /** T8: the reference's three concurrent queries over ONE source directory
     * (q4 cell 0:61-123): per-key stats, tumbling, sliding. With

@@ -56,6 +56,22 @@ class BenchClassifySpec extends AnyFunSuite {
       "a sample that found memos warm did LESS work — its fast time proves nothing")
   }
 
+  test("tie-break replay: every earlier pass-2 build owner, in pass order, listed or not") {
+    // pass order as the bench sorts it: rank-0 names alphabetically, then
+    // the rank-1 consumers; none of the three owners ahead of
+    // dedup_semantic has a rank of its own
+    val names = Seq("corpus_dataset_card", "dedup_cosine_sparse", "q1_word_count",
+      "similarity_ivf_sweep", "dedup_cosine_lsh", "dedup_semantic", "dedup_canonical")
+    val builds = Map("corpus_dataset_card" -> 2L, "dedup_cosine_sparse" -> 1L,
+      "q1_word_count" -> 0L, "similarity_ivf_sweep" -> 1L, "dedup_cosine_lsh" -> 0L,
+      "dedup_semantic" -> 1L, "dedup_canonical" -> 0L)
+    assert(Bench.replayBefore(names, "dedup_semantic", builds) ===
+      Seq("corpus_dataset_card", "dedup_cosine_sparse", "similarity_ivf_sweep"))
+    assert(Bench.replayBefore(names, "dedup_canonical", builds) ===
+      Seq("corpus_dataset_card", "dedup_cosine_sparse", "similarity_ivf_sweep", "dedup_semantic"))
+    assert(Bench.replayBefore(names, "corpus_dataset_card", builds) === Nil)
+  }
+
   test("pair divergence needs BOTH the ratio and the absolute floor") {
     assert(Bench.pairDiverges(1.0, 5.0))
     assert(!Bench.pairDiverges(1.0, 2.5), "under the 3x ratio")

@@ -25,17 +25,22 @@ class ScratchSpec extends SparkSpec {
   test("memoize computes a key exactly once under concurrent callers") {
     for ((entry, memo) <- keyedEntries) {
       val computes = new AtomicInteger(0)
-      val threads = (1 to 8).map { _ =>
+      // each thread hands back its count or what it threw: an assertion
+      // inside a spawned thread would only end that thread
+      val results = new Array[Either[Throwable, Long]](8)
+      val threads = results.indices.map { i =>
         new Thread(() => {
-          val df = memo(s"spec#concurrent-once-$entry", () => {
-            computes.incrementAndGet()
-            spark.range(100).select(col("id"))
-          })
-          assert(df.count() === 100L)
+          results(i) =
+            try Right(memo(s"spec#concurrent-once-$entry", () => {
+              computes.incrementAndGet()
+              spark.range(100).select(col("id"))
+            }).count())
+            catch { case t: Throwable => Left(t) }
         })
       }
       threads.foreach(_.start())
       threads.foreach(_.join())
+      assert(results.toSeq === Seq.fill(8)(Right(100L)), entry)
       assert(computes.get() === 1, entry)
     }
   }
