@@ -36,9 +36,12 @@ object Scratch {
 
   /** Eagerly delete a scratch path created by [[dir]] (best-effort) —
     * for owners that bound peak scratch disk themselves instead of waiting
-    * for the JVM-exit hook.
+    * for the JVM-exit hook — and forget its kept schema ([[Tables.parquet]]).
     */
-  def delete(path: String): Unit = deleteRecursively(Paths.get(path))
+  def delete(path: String): Unit = {
+    deleteRecursively(Paths.get(path))
+    Tables.forget(path)
+  }
 
   /** Default bucket count for persisted bucketed tables: the session's
     * shuffle parallelism (`spark.sql.shuffle.partitions`) with 16 as the
@@ -188,7 +191,9 @@ object Scratch {
   /** [[materialize]], memoized on a logical-stage key: the first call per JVM
     * computes `df` and writes it to scratch parquet; every later call with
     * the same key — from ANY query in the same Verify/Bench/test run — gets a
-    * scan of the already-written files without recomputing the stage.
+    * scan of the already-written files without recomputing the stage. The
+    * scan goes through [[Tables.parquet]], so only the build infers the
+    * files' schema: a hit launches no Spark job while the query is built.
     *
     * This is the production-DAG shape (materialize once, consume everywhere):
     * `dedup_components` consumes the very pair tables `dedup_minhash_lsh` /
@@ -220,7 +225,7 @@ object Scratch {
 
   private def memoizeWith(spark: org.apache.spark.sql.SparkSession, key: String, kind: String)
                          (write: String => Unit): DataFrame =
-    spark.read.parquet(build(key, kind, "graft_memo") { d => write(d); None }.span.path)
+    Tables.parquet(spark, build(key, kind, "graft_memo") { d => write(d); None }.span.path)
 
   /** Persist `df` once per (JVM, key) as a catalog table BUCKETED AND
     * SORTED by `bucketCols` (files under scratch), and hand back a scan of

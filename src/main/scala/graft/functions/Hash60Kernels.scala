@@ -77,8 +77,9 @@ object Hash60Kernels {
     * `hash60(w) & (buckets-1)` over the array's non-null elements,
     * emitted as (bucket, cnt) rows in ascending bucket order — exactly
     * the per-row slice of the explode → md5 → mask → groupBy-count shape
-    * it replaces (`buckets` must be a power of two; the mask semantics
-    * match the `& (buckets-1)` the SQL applied).
+    * it replaces (`buckets` must be a positive power of two, which the
+    * registered function checks at analysis; the mask semantics match the
+    * `& (buckets-1)` the SQL applied).
     */
   def bucketCounts(arr: ArrayData, buckets: Int): ArrayData = {
     val counts = new Array[Long](buckets)

@@ -8,10 +8,13 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.DataType
 
 /** One argument slot of a [[KernelFn]]: its SQL spelling, for the analysis
-  * error, and the check a resolved argument must pass. Equality is by
-  * spelling alone, so two plans holding the same row compare equal.
+  * error, the check a resolved argument must pass, and, for a foldable
+  * argument, the check its value must pass (`None` when it is valid, else
+  * why not). Equality is by spelling alone, so two plans holding the same
+  * row compare equal.
   */
-final case class Arg(sql: String)(val accepts: Expression => Boolean)
+final case class Arg(sql: String)(val accepts: Expression => Boolean,
+    val invalid: Any => Option[String] = _ => None)
 
 /** One row of the kernel table ([[Registry.kernels]]): the SQL name, the
   * object whose static method computes it, the argument checks, the result
@@ -44,7 +47,11 @@ case class Kernel(fn: KernelFn, children: Seq[Expression]) extends Expression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (children.length == fn.args.length && fn.args.zip(children).forall { case (a, c) => a.accepts(c) })
-      TypeCheckResult.TypeCheckSuccess
+      fn.args.zip(children).iterator
+        .flatMap { case (a, c) => if (c.foldable) a.invalid(c.eval()) else None }
+        .nextOption()
+        .fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(why =>
+          TypeCheckResult.TypeCheckFailure(s"${fn.name}: $why"))
     else TypeCheckResult.TypeCheckFailure(
       s"${fn.name} requires ${fn.args.map(_.sql).mkString("(", ", ", ")")}, " +
         s"got ${children.map(_.dataType.simpleString).mkString("(", ", ", ")")}")

@@ -24,7 +24,11 @@ object Registry {
     case _ => false
   })
   private val int = Arg("int")(_.dataType == IntegerType)
-  private val foldableInt = Arg("foldable int")(e => e.dataType == IntegerType && e.foldable)
+  // a mask `& (buckets - 1)` spreads over every bucket only for a power of two
+  private val buckets = Arg("foldable int")(e => e.dataType == IntegerType && e.foldable, {
+    case n: Int if n > 0 && (n & (n - 1)) == 0 => None
+    case v => Some(s"bucket count must be a positive power of two, got $v")
+  })
 
   /** The static kernels. The methods' own scaladoc says what each computes. */
   val kernels: Seq[KernelFn] = Seq(
@@ -41,10 +45,10 @@ object Registry {
     KernelFn("ahash64_sampled", FixtureEmitters.getClass, "ahash64Sampled", Seq(binary), LongType),
     KernelFn("hash60_array", Hash60Kernels.getClass, "hashArray", Seq(strings),
       ArrayType(LongType, containsNull = true)),
-    KernelFn("md5_bucket_counts", Hash60Kernels.getClass, "bucketCounts", Seq(strings, foldableInt),
+    KernelFn("md5_bucket_counts", Hash60Kernels.getClass, "bucketCounts", Seq(strings, buckets),
       Hash60Kernels.BucketCountType),
     KernelFn("trigram_bucket_counts", Hash60Kernels.getClass, "trigramCounts",
-      Seq(string, foldableInt), Hash60Kernels.BucketCountType),
+      Seq(string, buckets), Hash60Kernels.BucketCountType),
     KernelFn("gunzip", Gunzip.getClass, "gunzip", Seq(binary), BinaryType, alwaysNullable = true),
     KernelFn("zstd_inflate", ZstdInflate.getClass, "inflate", Seq(binary), BinaryType,
       alwaysNullable = true),

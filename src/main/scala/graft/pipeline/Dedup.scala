@@ -28,9 +28,10 @@ import graft.{QueryModule, Scratch, Tables}
   *     re-joins token sets for exact Jaccard on candidates only.
   *   - SimHash: per-row 64-bit signature; candidates via 4×16-bit chunk
   *     pigeonhole (guaranteed recall for hamming ≤ 3), verified by popcount.
-  *   - embedding near-dup: blocked by the Similarity.ivfAssign LSH bucket
-  *     (map-only assignment, equi-join on bucket); dot products are per-pair
-  *     codegen'd vec_dot expressions, never driver-side.
+  *   - embedding near-dup: blocked by Similarity.lshTableBuckets, the
+  *     multi-table hyperplane LSH (map-only assignment, equi-join on
+  *     (table, bucket)); dot products are per-pair codegen'd vec_dot
+  *     expressions, never driver-side.
   */
 object Dedup extends QueryModule {
 

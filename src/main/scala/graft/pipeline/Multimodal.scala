@@ -1378,9 +1378,7 @@ object Multimodal extends QueryModule {
     }
     legs.reduce(_ unionByName _)
       .as[(Long, Int, Array[Byte])]
-      .mapPartitions(_.map { case (id, o, p) =>
-        (id, o, MediaCodec.orientedAhash64(p))
-      })
+      .map { case (id, o, p) => (id, o, MediaCodec.orientedAhash64(p)) }
       .toDF("doc_id", "orientation", "ah")
       .orderBy("doc_id", "orientation")
   }

@@ -55,6 +55,17 @@ class KernelSpec extends SparkSpec {
     intercept[Exception](spark.range(1).selectExpr("gunzip()"))
   }
 
+  test("bucket-count kernels reject a count that is not a positive power of two, naming it") {
+    for (f <- Seq("md5_bucket_counts(array('a'), %s)", "trigram_bucket_counts('abcd', %s)");
+         n <- Seq("10", "0", "-4")) {
+      val sql = f.format(n)
+      val e = intercept[AnalysisException](spark.range(1).selectExpr(sql))
+      val name = sql.takeWhile(_ != '(')
+      assert(e.getMessage.contains(s"$name: bucket count must be a positive power of two, got $n"),
+        s"$sql: ${e.getMessage}")
+    }
+  }
+
   test("each kernel's generated source calls its static method directly") {
     Registry.kernels.foreach { k =>
       val df = spark.range(1).selectExpr(s"${k.name}(${k.args.map(goodArg).mkString(", ")}) AS v")
