@@ -88,7 +88,8 @@ object Scratch {
     try df.write.mode("overwrite").parquet(d)
     finally store.put(d, CompletableFuture.completedFuture(
       Build(Span(prefix, "ephemeral", t0, System.nanoTime() - t0, d), None)))
-    df.sparkSession.read.parquet(d)
+    // the schema just written, so the read-back runs no footer-inference job
+    df.sparkSession.read.schema(df.schema).parquet(d)
   }
 
   /** Delete every per-invocation [[materialize]] dir created since the last

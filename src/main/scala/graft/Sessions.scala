@@ -6,6 +6,14 @@ import org.apache.spark.sql.SparkSession
   * extensions (vec_dot), no UI, shuffle fan-out = cores. Every main and the
   * test fixture build through here so a new session-level conf cannot drift
   * across entry points.
+  *
+  * Streaming checkpoints go through [[streaming.LocalCheckpointFiles]]. This
+  * JVM runs Hadoop without `libhadoop`, so Spark's default checkpoint manager
+  * forks a `chmod` for every checkpoint file (and its `.crc` sidecar) it
+  * creates and a `readlink` for every rename: 300-440 process starts a
+  * second under three concurrent queries on 4 cores, most of each
+  * micro-batch's commit time. The engine's manager writes the same files
+  * without forking.
   */
 object Sessions {
   // spark.sql.warehouse.dir is a STATIC conf — fixed by the first
@@ -32,6 +40,8 @@ object Sessions {
       // growth (BENCH_r09 divergent-pair profiles)
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[streaming.LocalCheckpointFiles].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -52,7 +52,17 @@ object Session {
   *
   * Scale: state per query is bounded — (keys) for Part A, (open windows ×
   * keys) under the watermark for Part B/C; the file source lists only new
-  * files per trigger; no per-record driver work anywhere.
+  * files per trigger; no per-record driver work anywhere. The per-batch
+  * floor is the checkpoint: each committed micro-batch writes a sources,
+  * offsets and commits log entry, and each stateful query a delta file per
+  * state partition, every file with its `.crc` sidecar. They go through
+  * [[LocalCheckpointFiles]] (fixed in `graft.Sessions`), which writes them
+  * without forking a process; under Spark's default manager on a JVM
+  * without `libhadoop` each file forks `chmod` and `readlink`, 300-440
+  * processes a second under the three [[startAll]] queries on 4 cores, and
+  * that, not Spark work, set the batch floor (`sensor_stream` traced:
+  * commit p50 about 90 ms and `latestOffset` p50 about 50 ms with the forks,
+  * 2-5 ms without).
   */
 object SensorStreams {
 

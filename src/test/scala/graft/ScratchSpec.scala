@@ -2,8 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Contract tests for the scratch memo layer: exactly-once compute per key
   * under concurrency, independence across keys, retry after failure, eager
@@ -95,6 +96,31 @@ class ScratchSpec extends SparkSpec {
     val before = Scratch.spans
     Scratch.memoize(spark, "spec#span-memo-a")(fail("a memo hit must not recompute")).count()
     assert(Scratch.spans === before)
+  }
+
+  test("materialize reads back with the schema a plain parquet read infers") {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StructType(Seq(
+        StructField("a", IntegerType, nullable = false), StructField("b", StringType))),
+        nullable = false),
+      StructField("xs", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("m", MapType(StringType, DoubleType, valueContainsNull = false)),
+      StructField("d", DecimalType(18, 4), nullable = false),
+      StructField("t", TimestampType),
+      StructField("tn", TimestampNTZType, nullable = false)))
+    val at = java.time.Instant.parse("2024-01-01T00:00:30Z")
+    val rows = Seq(
+      Row(1L, Row(1, "x"), Seq(1, 2), Map("k" -> 1.5), BigDecimal("1.2345"),
+        java.sql.Timestamp.from(at), java.time.LocalDateTime.parse("2024-01-01T00:00:30")),
+      Row(2L, Row(2, null), Seq.empty[Int], null, BigDecimal("-7"), null,
+        java.time.LocalDateTime.parse("2024-02-29T12:00:00")))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val back = Scratch.materialize(df, "graft_spec_schema")
+    val written = spansNamed("graft_spec_schema").head.path
+    assert(back.schema === spark.read.parquet(written).schema)
+    assert(back.collect().toSeq === spark.read.parquet(written).collect().toSeq)
+    Scratch.sweepEphemeral()
   }
 
   test("clearMemo, dropBucketedTables and sweepEphemeral each drop their spans") {

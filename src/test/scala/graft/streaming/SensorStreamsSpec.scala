@@ -6,11 +6,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSpec
 import graft.operators.Events
-
-case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
-              event_type: String, value: Double, props: String)
 
 /** Streaming semantics against the batch twins (SURVEY §5.3): a Structured
   * Streaming query over a finite MemoryStream input must converge to the
@@ -23,20 +19,9 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
   * late-row semantics are asserted separately in update mode, where the
   * reference runs (T5).
   */
-class SensorStreamsSpec extends SparkSpec {
+class SensorStreamsSpec extends StreamFixtures {
   import spark.implicits._
   implicit private def sqlCtx: SQLContext = spark.sqlContext
-
-  private def ev(id: Long, at: String, typ: String, value: Double): Ev =
-    Ev(id, Timestamp.from(Instant.parse(at)), id % 7, typ, value, "{}")
-
-  private val batch1 = Seq(
-    ev(1, "2024-01-01T00:00:30Z", "click", 1.25),
-    ev(2, "2024-01-01T00:01:10Z", "click", 2.50),
-    ev(3, "2024-01-01T00:06:00Z", "view", 10.00),
-    ev(4, "2024-01-01T00:20:00Z", "click", 4.75))
-  private val late = ev(5, "2024-01-01T00:01:00Z", "view", 99.00) // < watermark (00:18) in batch 2
-  private val onTime2 = ev(6, "2024-01-01T00:21:00Z", "view", 6.00)
 
   /** Feed two micro-batches through `transform` into a memory sink. */
   private def runStream(transform: DataFrame => DataFrame, mode: String,
@@ -107,65 +92,9 @@ class SensorStreamsSpec extends SparkSpec {
     assert(spark.streams.active.isEmpty)
   }
 
-  /** One JSON-lines file per element of `batches`, named from `from`. */
-  private def writeJson(dir: java.nio.file.Path, batches: Seq[Seq[Ev]], from: Int = 0): Unit =
-    batches.zipWithIndex.foreach { case (evs, i) =>
-      val json = evs.map(e =>
-        s"""{"event_id":${e.event_id},"ts":"${e.ts.toInstant}","user_id":${e.user_id},""" +
-          s""""event_type":"${e.event_type}","value":${e.value},"props":"{}"}""").mkString("\n")
-      java.nio.file.Files.writeString(dir.resolve(s"f${from + i}.json"), json)
-    }
-
-  /** Both keyed-state backends the engine supports: the default in-memory
-    * (HDFS-backed) provider and RocksDB — the provider 100 TB-scale keyed
-    * state actually runs on (state spills to local SSD instead of living on
-    * the executor heap). The provider is read from the session conf at query
-    * START, so scoping the setting around the scenario pins it per test.
-    */
-  private val providers = Seq(
-    "default" -> None,
-    "rocksdb" -> Some(
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-
-  private def withStateProvider(providerClass: Option[String])(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    providerClass.foreach(spark.conf.set(key, _))
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   for ((tag, providerClass) <- providers)
     test(s"checkpointed stream restarts with state AND source offsets intact ($tag provider)") {
-      withStateProvider(providerClass) {
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_recov_src_$tag")
-        val ckpt = java.nio.file.Files.createTempDirectory(s"graft_recov_ckpt_$tag").toString
-        def perKey = SensorStreams.perKeyStats(
-          SensorStreams.parsed(SensorStreams.fileSource(spark, dir.toString)))
-
-        writeJson(dir, Seq(batch1))
-        val q1 = SensorStreams.startMemory(perKey, s"recov_${tag}_run1", "complete",
-          "1 second", Some(ckpt))
-        try { q1.processAllAvailable() } finally q1.stop()
-
-        // second file arrives while the query is DOWN
-        writeJson(dir, Seq(Seq(onTime2)), from = 1)
-        val q2 = SensorStreams.startMemory(perKey, s"recov_${tag}_run2", "complete",
-          "1 second", Some(ckpt))
-        try {
-          q2.processAllAvailable()
-          val streamed = spark.table(s"recov_${tag}_run2").orderBy("event_type").collect().toSeq
-          val batch = Events.perKeyStats((batch1 :+ onTime2).toDF)
-            .orderBy("event_type").collect().toSeq
-          // equality proves BOTH directions of recovery: batch1's contribution is
-          // present (state restored from the checkpoint) and not double-counted
-          // (f0's offset was committed, so the restarted run read only f1)
-          assert(streamed === batch)
-        } finally q2.stop()
-      }
+      assertRestartKeepsStateAndOffsets(tag, providerClass)
     }
 
   test("console sink runs a micro-batch in update mode (K2)") {
@@ -182,14 +111,14 @@ class SensorStreamsSpec extends SparkSpec {
 
   for ((tag, providerClass) <- providers)
     test(s"flatMapGroupsWithState sessionization closes sessions by gap and by timeout ($tag provider)") {
-      withStateProvider(providerClass) {
+      withConf(StateProviderKey, providerClass) {
         sessionizeScenario(s"fmgws_$tag", df => SensorStreams.sessionize(df).toDF)
       }
     }
 
   test("transformWithState sessionization matches the same scenario (rocksdb provider)") {
     // the TWS API supports only the RocksDB state store
-    withStateProvider(providers.toMap.apply("rocksdb")) {
+    withConf(StateProviderKey, providers.toMap.apply("rocksdb")) {
       sessionizeScenario("tws", df => SensorStreams.sessionizeTws(df).toDF)
     }
   }
